@@ -355,3 +355,87 @@ def test_cc_hybrid_local_finish_equals_iterative(spark):
     }
     assert hybrid == iterative
     assert hybrid["iso1"] == "iso1" and hybrid["n040"] == "n000"
+
+
+def _random_string_graph(rng, n_nodes, n_edges):
+    """Random string-id graph whose ids include numeric strings, where
+    code-point order ("10" < "9") and numeric order disagree."""
+    nodes = [str(i) for i in range(n_nodes)] + ["9", "10", "100", "a", "Z", "é"]
+    nodes = sorted(set(nodes))
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(n_edges)]
+    return nodes, [(a, b) for a, b in edges if a != b]
+
+
+def test_cc_small_path_parity_skips_encode(spark, tmp_path, monkeypatch):
+    """An input within local_finish_threshold runs the union-find on the
+    original ids: labels equal the pure-iterative (encoded) path and the
+    oracle, including the numeric-string min ("10" < "9"), and the node
+    dictionary is never built — with and without a checkpoint dir."""
+    from whoiswho_spark.operators import clustering as C
+
+    rng = random.Random(5)
+    for trial in range(3):
+        nodes, edges = _random_string_graph(rng, 30, rng.randint(15, 60))
+        edges += [("9", "10")]
+        want = _union_find(edges, nodes)
+        edf = spark.createDataFrame(edges, "src string, dst string")
+        vdf = spark.createDataFrame([(x,) for x in nodes], "url string")
+
+        def labels(**kw):
+            cc = connected_components(edf, vertices=vdf, **kw)
+            return {r["url"]: r["cluster_id"] for r in cc.collect()}
+
+        iterative = labels(local_finish_threshold=0)
+
+        def _no_dictionary(_edges):
+            raise AssertionError("small path built the node dictionary")
+
+        with monkeypatch.context() as m:
+            m.setattr(C, "_node_ranks", _no_dictionary)
+            small = labels()
+            small_ckpt = labels(checkpoint_dir=str(tmp_path / f"cc{trial}"))
+        assert small == small_ckpt == iterative == want, f"trial {trial}"
+
+
+def test_cc_cross_path_resume_wipes_checkpoints(spark, tmp_path):
+    """Small-path iteration files hold the original ids, encoded-loop
+    files dense longs. A dir written by one path and resumed by the other
+    must be wiped and recomputed (format marker in the input key), never
+    read in the wrong format."""
+    import json
+    import os
+
+    rng = random.Random(9)
+    nodes, edges = _random_string_graph(rng, 30, 45)
+    want = _union_find(edges, nodes)
+    edf = spark.createDataFrame(edges, "src string, dst string")
+    vdf = spark.createDataFrame([(x,) for x in nodes], "url string")
+    ckpt = str(tmp_path / "cc")
+
+    def labels(**kw):
+        cc = connected_components(edf, vertices=vdf, checkpoint_dir=ckpt, **kw)
+        return {r["url"]: r["cluster_id"] for r in cc.collect()}
+
+    def marker():
+        with open(f"{ckpt}/input_checksum/_SUCCESS") as f:
+            return json.load(f)[-1]
+
+    def iter_mtime():
+        return os.path.getmtime(f"{ckpt}/iter_0/_SUCCESS")
+
+    assert labels() == want
+    assert marker() == "small1"
+    assert sorted(d for d in os.listdir(ckpt) if d.startswith("iter_")) == ["iter_0"]
+    small_mtime = iter_mtime()
+
+    assert labels(local_finish_threshold=0) == want  # small dir → encoded run
+    assert marker() == "enc1"
+    assert iter_mtime() != small_mtime  # recomputed, not resumed
+    enc_iters = sorted(d for d in os.listdir(ckpt) if d.startswith("iter_"))
+    assert len(enc_iters) > 1
+    enc_mtime = iter_mtime()
+
+    assert labels() == want  # encoded dir → small run
+    assert marker() == "small1"
+    assert iter_mtime() != enc_mtime
+    assert sorted(d for d in os.listdir(ckpt) if d.startswith("iter_")) == ["iter_0"]

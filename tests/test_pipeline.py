@@ -200,6 +200,80 @@ def test_metrics_lineage_written(spark, corpus, workdir):
     assert m.where("partition_id is null").count() == 0
 
 
+def test_metrics_rows_out_sum_to_stored_rows(spark, workdir):
+    """The per-partition counts read from the write tasks add up, for
+    every stage of the gate run, to the rows of the stored table."""
+    from whoiswho_spark.plans import metrics as M
+
+    wd = f"{workdir}/gate"  # built above
+    sums = {
+        r["stage"]: r["n"]
+        for r in M.read_metrics(spark, wd)
+        .groupBy("stage")
+        .agg(F.sum("rows_out").alias("n"))
+        .collect()
+    }
+    assert {"extract", "blocks", "pairs", "edges", "clusters"} <= set(sums)
+    for stage_name, n in sums.items():
+        assert n == spark.read.parquet(f"{wd}/{stage_name}").count(), stage_name
+
+
+def test_stage_counts_come_from_the_write(spark, tmp_path, monkeypatch):
+    """stage() takes per-partition rows from the write tasks: the
+    stored-table re-count is never called, and the counts add up."""
+    from whoiswho_spark.plans import metrics as M
+
+    def _no_recount(*_a, **_k):
+        raise AssertionError("stage() re-counted the stored table")
+
+    monkeypatch.setattr(M, "append_metrics", _no_recount)
+    wd = str(tmp_path)
+    df = spark.range(0, 1000, 1, 8).groupBy((F.col("id") % 37).alias("k")).count()
+    M.stage(spark, wd, "r1", "s", lambda: df)
+    rows = M.read_metrics(spark, wd).collect()
+    assert sum(r["rows_out"] for r in rows) == 37
+    assert len({r["partition_id"] for r in rows}) == len(rows)
+
+
+def test_stage_empty_output_records_zero_row(spark, workdir):
+    """A stage whose output is empty (no edge reaches the threshold)
+    still records its lineage: one row with rows_out = 0."""
+    from whoiswho_spark.operators.clustering import threshold_edges
+    from whoiswho_spark.plans import metrics as M
+
+    pairs = spark.read.parquet(f"{workdir}/gate/pairs")
+    wd = f"{workdir}/empty_stage"
+    shutil.rmtree(wd, ignore_errors=True)
+    out = M.stage(
+        spark, wd, "r1", "edges", lambda: threshold_edges(pairs, 1e9), resume=False
+    )
+    assert out.count() == 0
+    rows = M.read_metrics(spark, wd).collect()
+    assert [(r["stage"], r["rows_out"]) for r in rows] == [("edges", 0)]
+
+
+def test_stage_restores_caller_job_group(spark, tmp_path):
+    """stage() runs its write under its own job group; the caller's job
+    group and description are back in place afterwards."""
+    from whoiswho_spark.plans import metrics as M
+
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller description")
+    try:
+        M.stage(spark, str(tmp_path), "r1", "s", lambda: spark.range(10))
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.getLocalProperty("spark.job.description") == "caller description"
+        # the caller's later jobs still land in its group
+        before = set(sc.statusTracker().getJobIdsForGroup("caller-group"))
+        spark.range(5).collect()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+        assert set(sc.statusTracker().getJobIdsForGroup("caller-group")) - before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+
 def test_eval_restricted_to_shared_block_pairs(spark, corpus, workdir):
     """The metric input only contains labeled urls with their block keys."""
     wd = f"{workdir}/gate"

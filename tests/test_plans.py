@@ -104,103 +104,3 @@ def test_pair_join_is_narrow_before_payload(spark):
     # the payload joins appear above the block self-join in the plan tree:
     # optimized plan's innermost join must be on block_key with 2-col inputs
     assert opt.count("Join") >= 3  # self-join + two payload attaches
-
-
-def test_stage_bucketed_resume_join_no_exchange(spark, tmp_path):
-    """Bucketed stage checkpoints: a resumed run re-registers the stored
-    bucket layout (fresh metastore) and a join on the bucket key reads
-    both sides with ZERO Exchange — the re-shuffle the plain parquet
-    checkpoint would pay on every resume."""
-    import pyspark.sql.functions as F
-
-    from whoiswho_spark.plans import metrics as M
-
-    wd = str(tmp_path / "wd")
-    left = spark.range(0, 500).select(
-        F.col("id").cast("string").alias("url"), (F.col("id") * 2).alias("a")
-    )
-    right = spark.range(0, 500).select(
-        F.col("id").cast("string").alias("url"), (F.col("id") * 3).alias("b")
-    )
-    M.stage_bucketed(spark, wd, "r1", "payload", lambda: left, "url", 8)
-    M.stage_bucketed(spark, wd, "r1", "embeddings", lambda: right, "url", 8)
-    # emulate a fresh session: the metastore forgot the tables, only the
-    # parquet files + _SUCCESS remain
-    for n in ("payload", "embeddings"):
-        spark.sql(f"DROP TABLE IF EXISTS {M._bucket_table_name(wd, n)}")
-
-    called = []
-
-    def _must_not_run():
-        called.append(1)
-        return left
-
-    l2 = M.stage_bucketed(spark, wd, "r2", "payload", _must_not_run, "url", 8)
-    r2 = M.stage_bucketed(spark, wd, "r2", "embeddings", _must_not_run, "url", 8)
-    assert called == []  # resumed from the checkpoint, not recomputed
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = l2.join(r2, "url")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert j.count() == 500
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_stage_bucketed_resume_validates_bucket_spec(spark, tmp_path):
-    """Resume must not trust the CALLER's bucket config: a checkpoint
-    written with a different (col, n_buckets) — or by plain stage(),
-    which records no spec — re-registers CLUSTERED BY metadata the files
-    don't satisfy, silently dropping join matches. The stored spec is
-    validated; on mismatch the resume falls back to a plain parquet read
-    (correct, just with an Exchange) and drops any stale catalog entry."""
-    import warnings
-
-    import pyspark.sql.functions as F
-
-    from whoiswho_spark.plans import metrics as M
-
-    wd = str(tmp_path / "wd")
-    df = spark.range(0, 300).select(
-        F.col("id").cast("string").alias("url"), (F.col("id") * 2).alias("a")
-    )
-    M.stage_bucketed(spark, wd, "r1", "payload", lambda: df, "url", 8)
-    tbl = M._bucket_table_name(wd, "payload")
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-
-    # resumed with a DIFFERENT n_buckets: plain read, no bucket table
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out = M.stage_bucketed(
-            spark, wd, "r2", "payload",
-            lambda: (_ for _ in ()).throw(AssertionError("recompute ran")),
-            "url", 4,
-        )
-        assert any("bucket spec" in str(x.message) for x in w)
-    assert out.count() == 300  # still the checkpoint's data
-    assert not spark.catalog.tableExists(tbl)
-
-    # matching spec: the bucket table is registered again
-    out2 = M.stage_bucketed(
-        spark, wd, "r3", "payload",
-        lambda: (_ for _ in ()).throw(AssertionError("recompute ran")),
-        "url", 8,
-    )
-    assert out2.count() == 300
-    assert spark.catalog.tableExists(tbl)
-
-    # a checkpoint with NO spec (plain stage() output) also falls back
-    wd2 = str(tmp_path / "wd2")
-    M.stage(spark, wd2, "r1", "payload", lambda: df)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out3 = M.stage_bucketed(
-            spark, wd2, "r2", "payload",
-            lambda: (_ for _ in ()).throw(AssertionError("recompute ran")),
-            "url", 8,
-        )
-        assert any("bucket spec" in str(x.message) for x in w)
-    assert out3.count() == 300

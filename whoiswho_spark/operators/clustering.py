@@ -283,21 +283,25 @@ def connected_components(
     union-find task (``_local_union_find_star``) emits the final star set
     directly — the iterative path's O(log n) tail of 6-shuffle rounds
     becomes one task. At 100 TB the first rounds run distributed; the
-    sub-bound tail always finishes locally. ``local_finish_threshold=0``
-    forces the pure-iterative path. Each iteration truncates lineage: in-memory
-    localCheckpoint by default, or — when ``checkpoint_dir`` is given —
-    a parquet checkpoint per iteration (``iter_k`` dirs with _SUCCESS
-    markers), so a killed job resumes MID-STAGE from the last completed
-    iteration instead of recomputing the loop (north-rule resumability).
+    sub-bound tail always finishes locally. An input already within the
+    bound (its count comes from the input checksum) skips the node
+    dictionary encode too: the union-find runs on the original ids.
+    ``local_finish_threshold=0`` forces the pure-iterative path. Each
+    iteration truncates lineage: in-memory localCheckpoint by default,
+    or — when ``checkpoint_dir`` is given — a parquet checkpoint per
+    iteration (``iter_k`` dirs with _SUCCESS markers), so a killed job
+    resumes MID-STAGE from the last completed iteration instead of
+    recomputing the loop (north-rule resumability).
 
     Checkpoint safety: the dir is keyed by a content checksum of the INPUT
     edge set (count + order-insensitive xxhash64 XOR, stored in
-    ``input_checksum``). A resumed run whose input no longer matches — the
-    threshold changed, the pairs were regenerated — wipes the stale state
-    and recomputes instead of silently returning the previous run's
-    clusters. ``resume=False`` wipes unconditionally. The ``converged``
-    marker is written ONLY when the fixpoint was actually observed; if the
-    loop exhausts ``max_iter`` first, :class:`ConvergenceError` is raised
+    ``input_checksum``, with a marker of the iteration-file format). A
+    resumed run whose input no longer matches — the threshold changed,
+    the pairs were regenerated — wipes the stale state and recomputes
+    instead of silently returning the previous run's clusters.
+    ``resume=False`` wipes unconditionally. The ``converged`` marker is
+    written ONLY when the fixpoint was actually observed; if the loop
+    exhausts ``max_iter`` first, :class:`ConvergenceError` is raised
     (never wrong labels), and a resumed run with a larger ``max_iter``
     continues from the last checkpointed iteration.
 
@@ -323,8 +327,8 @@ def connected_components(
     # (min-rank ↔ min-node, so labels decode identically — see
     # _node_ranks); the loop then runs hash-aggregated, 16-byte-row star
     # rounds. Measured at the sf1 stand-in (24M string edges): 17.1 s →
-    # 8.7 s end-to-end, labels identical. Integral ids skip the encode.
-    input_edges = edges
+    # 8.7 s end-to-end, labels identical. Integral ids skip the encode,
+    # and so do small inputs (below).
     use_encode = dict(edges.dtypes)["src"] not in (
         "tinyint", "smallint", "int", "bigint"
     )
@@ -336,7 +340,7 @@ def connected_components(
             return e.localCheckpoint()
         path = f"{checkpoint_dir}/iter_{it}"
         e.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return spark.read.schema(e.schema).parquet(path)  # no inference job
 
     def _resume_point() -> tuple[int, DataFrame | None]:
         if checkpoint_dir is None:
@@ -361,21 +365,27 @@ def connected_components(
         ).collect()[0]
         return (row["n"], row["h"])
 
-    if checkpoint_dir is not None:
+    def _is_small(n: int) -> bool:
+        # Small-input path: an input at or below the local-finish bound
+        # goes straight to the union-find finish, on the ORIGINAL ids —
+        # the dictionary encode, the encoded checksum, the lineage cuts
+        # and the decode joins only pay when star rounds run.
+        return 0 < local_finish_threshold and n <= local_finish_threshold
+
+    cut = False  # is ``edges`` already a localCheckpoint of the input?
+    if checkpoint_dir is None:
+        # cut first, then count the cut: one evaluation of the input
+        edges = edges.localCheckpoint()
+        cut = True
+        input_sum = _checksum(edges)
+        small = _is_small(input_sum[0])
+    else:
         import json
 
         # Key the checkpoint state by the input edges' content checksum so a
         # stale dir (different edges, same workdir) is never silently reused.
         # Stored as a plain-text FS file (zero Spark jobs) at a path whose
         # existence check matches the _SUCCESS convention.
-        input_sum = _checksum(edges)
-        if use_encode:
-            # iteration files hold ENCODED (long) edges now — version-mark
-            # the content key so checkpoint dirs written by the string-edge
-            # format read as stale and are wiped instead of resumed into
-            # the wrong schema. Integral-id checkpoints keep the old key
-            # (their format is unchanged).
-            input_sum = (*input_sum, "enc1")
         sum_path = f"{checkpoint_dir}/input_checksum/_SUCCESS"
         stored_sum = None
         if not resume:
@@ -387,10 +397,30 @@ def connected_components(
                     stored_sum = tuple(json.loads(raw))
                 except ValueError:
                     stored_sum = None
+        if use_encode and stored_sum and stored_sum[-1] == "enc1":
+            # a dir of encoded iterations: resuming it rebuilds the
+            # dictionary, so cut the input once and feed both the
+            # checksum and _node_ranks from that cut
+            edges = edges.localCheckpoint()
+            cut = True
+        input_sum = _checksum(edges)
+        small = _is_small(input_sum[0])
+        # Iteration-file format marker. Small-path files hold the original
+        # ids, encoded-loop files dense longs, so the key says which path
+        # wrote them and a resume never reads one format as the other: a
+        # dir from the other path reads as stale and is wiped. The path is
+        # a function of the input count (key[0]) and the threshold, so
+        # equal keys mean equal paths. Integral-id loop checkpoints keep
+        # the unmarked key (their format never changed).
+        if small:
+            input_sum = (*input_sum, "small1")
+        elif use_encode:
+            input_sum = (*input_sum, "enc1")
         if stored_sum != input_sum:
             _delete_path(spark, checkpoint_dir)
             _fs_write_text(spark, sum_path, json.dumps(list(input_sum)))
 
+    input_edges = edges
     start_iter, resumed = _resume_point()
     already_converged = False
     if resumed is not None:
@@ -402,29 +432,28 @@ def connected_components(
         # FS API → works on any Hadoop-compatible FS (object stores
         # included), single-file create, zero Spark jobs
         already_converged = _success_exists(spark, f"{checkpoint_dir}/converged")
+    elif small:
+        # the loop's first step is the union-find finish on the input
+        prev = input_sum
     else:
         # lineage cut only — _resume_point scans from iter_0, so a parquet
         # copy of the INPUT would never be read by a resume; localCheckpoint
         # gives the same cut without the write+read round-trip
-        edges = edges.localCheckpoint()
+        if not cut:
+            edges = edges.localCheckpoint()
         if use_encode:
             # dictionary from the CUT input (one lineage evaluation), then
-            # cut the narrow long edges the loop will actually iterate on
+            # cut the narrow long edges the loop will actually iterate on;
+            # the loop checksums the LONG edges (the string input_sum would
+            # never match a round hash), so the fixpoint test is meaningful
+            # from round 1
             ranks, n_nodes = _node_ranks(edges)
             edges = _encode_edges(edges, ranks, n_nodes).localCheckpoint()
-        prev = None
+            prev = _checksum(edges)
+        else:
+            prev = input_sum
 
     if not already_converged:
-        if prev is None:
-            # encoded loops checksum the LONG edges (the string input_sum
-            # would never match a round hash; counts are preserved by the
-            # encode, but one cheap aggregate keeps the fixpoint test
-            # meaningful from round 1)
-            prev = (
-                input_sum
-                if checkpoint_dir is not None and not use_encode
-                else _checksum(edges)
-            )
         converged = False
         it = start_iter
         while True:
@@ -433,7 +462,7 @@ def connected_components(
             # finish in ONE union-find task instead of O(log n) more
             # rounds of 6 shuffles each. local_finish_threshold=0
             # disables (pure-iterative path).
-            if local_finish_threshold > 0 and prev[0] <= local_finish_threshold:
+            if _is_small(prev[0]):
                 edges = _persist(_local_union_find_star(edges), it + 1)
                 converged = True
                 break
@@ -467,10 +496,10 @@ def connected_components(
         .agg(F.least(F.min("dst"), F.first("src")).alias("cluster_id"))
         .select(F.col("src").alias("url"), "cluster_id")
     )
-    if use_encode:
+    if use_encode and not small:
         # decode ranks → original node ids; min-rank ↔ min-node, so the
         # labels are exactly the string loop's. A resumed/already-
-        # converged run rebuilds the dictionary from the input (rank
+        # converged run rebuilds the dictionary from the cut input (rank
         # values are reproducible for the same node set — _node_ranks).
         if ranks is None:
             ranks, n_nodes = _node_ranks(input_edges)

@@ -14,8 +14,18 @@ load_utils.py:25-173); ours is a thin deterministic table protocol:
 
 ``stage()`` is the only entry point: skip-if-complete, else compute,
 write, count per partition, append metrics. Partition counts come from
-``spark_partition_id`` — one cheap extra aggregate on the already-written
-table, not an accumulator (deterministic under retries).
+the write job itself: each successful write task's
+``outputMetrics.recordsWritten`` as the JVM status store recorded it,
+so ``partition_id`` is the partition index of the write task and
+counting costs no extra Spark job. The task metrics are deterministic
+under retries (one successful attempt per partition is counted). The
+crash-window backfill on resume, which has no write to read from, and a
+write the status store did not record in full re-count the stored table
+by ``spark_partition_id`` instead.
+
+Metric rows are built as a JVM literal relation (``_append_rows``),
+never with ``spark.createDataFrame(list)``, which starts a Python worker
+(about 1 s per call) for a handful of rows.
 
 At cluster scale the same protocol targets Iceberg tables
 (``writeTo(...).append()``); parquet-dir is the local stand-in with
@@ -27,12 +37,21 @@ from __future__ import annotations
 import time
 import uuid
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 METRICS_SCHEMA = (
     "run_id string, stage string, partition_id int, rows_out bigint, "
     "wall_ms bigint, ts timestamp"
+)
+
+# local properties SparkContext.setJobGroup sets; saved and restored
+# around a stage write so the caller's job group survives it
+_JOB_GROUP_PROPS = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
 )
 
 
@@ -48,6 +67,30 @@ def _success_exists(spark: SparkSession, path: str) -> bool:
     return p.getFileSystem(conf).exists(p)
 
 
+def _append_rows(
+    spark: SparkSession, path: str, schema: str, rows: list[tuple]
+) -> None:
+    """Append ``rows`` to the parquet table at ``path``. ``schema`` is
+    the table's DDL; its last column is the ``ts timestamp`` stamped
+    here, so each row carries the values of the other columns in order.
+    The rows become a literal relation planned in the JVM — one write
+    job, no Python worker."""
+    cols = [c.split() for c in schema.split(",")][:-1]
+    lit_rows = F.array(
+        *[
+            F.struct(*[F.lit(v).cast(t).alias(n) for (n, t), v in zip(cols, row)])
+            for row in rows
+        ]
+    )
+    (
+        spark.range(0, 1, 1, 1)
+        .select(F.inline(lit_rows))
+        .withColumn("ts", F.current_timestamp())
+        .write.mode("append")
+        .parquet(path)
+    )
+
+
 def append_metrics(
     spark: SparkSession,
     workdir: str,
@@ -56,6 +99,9 @@ def append_metrics(
     out_df: DataFrame,
     wall_ms: int,
 ) -> None:
+    """Count ``out_df`` per ``spark_partition_id`` and append the rows —
+    the re-count for a stage whose write is not observable (resume
+    backfill)."""
     counts = (
         out_df.groupBy(F.spark_partition_id().alias("partition_id"))
         .agg(F.count("*").alias("rows_out"))
@@ -69,6 +115,69 @@ def append_metrics(
         )
     )
     counts.write.mode("append").parquet(f"{workdir}/metrics")
+
+
+def _written_rows(spark: SparkSession, group: str) -> dict[int, int] | None:
+    """partition → records written by the write job in job group
+    ``group``, read from the JVM status store; None when the store does
+    not hold the complete write (for example, the listener bus dropped
+    events from a full queue).
+
+    The write is the group's last job and its result stage is that job's
+    highest stage id (earlier jobs are AQE query stages, whose shuffle
+    map tasks write no records). Every attempt of the result stage is
+    read, the last one first; only SUCCESS tasks count, one per
+    partition, so stage retries and speculative copies are not
+    double-counted."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    # task-end events reach the status store through the async listener
+    # bus; drain it so the write's tasks are all recorded
+    try:
+        jsc.listenerBus().waitUntilEmpty()
+    except Py4JJavaError:  # the drain timed out
+        return None
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    if not job_ids:
+        return None
+    job = tracker.getJobInfo(max(job_ids))
+    if job is None or job.status != "SUCCEEDED":
+        return None
+    result_stage = max(job.stageIds)
+    info = tracker.getStageInfo(result_stage)
+    if info is None:
+        return None
+    store = jsc.statusStore()
+    as_java = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    rows: dict[int, int] = {}
+    for attempt in range(info.currentAttemptId, -1, -1):
+        for td in as_java(store.taskList(result_stage, attempt, 2**31 - 1)):
+            part = td.partitionId()
+            if td.status() != "SUCCESS" or part in rows:
+                continue
+            m = td.taskMetrics()
+            rows[part] = m.get().outputMetrics().recordsWritten() if m.isDefined() else 0
+        if attempt == info.currentAttemptId and len(rows) != info.numTasks:
+            return None  # the succeeded attempt lacks some of its tasks
+    return rows
+
+
+def _write_counted(
+    spark: SparkSession, df: DataFrame, path: str, group: str
+) -> dict[int, int] | None:
+    """Write ``df`` to ``path`` under job group ``group`` and return its
+    per-partition record counts (``_written_rows``). The caller's job
+    group and description are restored afterwards."""
+    sc = spark.sparkContext
+    saved = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
+    sc.setJobGroup(group, group)
+    try:
+        df.write.mode("overwrite").parquet(path)
+    finally:
+        for k, v in zip(_JOB_GROUP_PROPS, saved):
+            sc.setLocalProperty(k, v)
+    return _written_rows(spark, group)
 
 
 def stage(
@@ -90,7 +199,7 @@ def stage(
         # otherwise return here and the (stage) metrics rows would be
         # missing FOREVER — backfill them from the checkpoint (wall_ms=0
         # marks a backfilled row; partition counts re-derived from the
-        # stored table are the same lineage the original append records).
+        # stored table sum to the same rows the original append records).
         try:
             have = (
                 read_metrics(spark, workdir)
@@ -106,96 +215,25 @@ def stage(
         return persisted
     t0 = time.monotonic()
     out = compute()
-    out.write.mode("overwrite").parquet(path)
+    written = _write_counted(
+        spark, out, path, f"whoiswho_spark.stage:{run_id}:{name}:{new_run_id()}"
+    )
     wall_ms = int((time.monotonic() - t0) * 1000)
-    persisted = spark.read.parquet(path)
-    append_metrics(spark, workdir, run_id, name, persisted, wall_ms)
+    # reading with the written schema skips parquet's footer-inference
+    # job; file sources read every column as nullable either way
+    persisted = spark.read.schema(out.schema).parquet(path)
+    if written is None:
+        # the status store does not hold the whole write: re-count the
+        # stored table instead
+        append_metrics(spark, workdir, run_id, name, persisted, wall_ms)
+        return persisted
+    # an empty output still records one row, so every stage that ran
+    # shows up in the lineage
+    rows = [
+        (run_id, name, p, n, wall_ms) for p, n in sorted((written or {0: 0}).items())
+    ]
+    _append_rows(spark, f"{workdir}/metrics", METRICS_SCHEMA, rows)
     return persisted
-
-
-def read_metrics(spark: SparkSession, workdir: str) -> DataFrame:
-    return spark.read.schema(METRICS_SCHEMA).parquet(f"{workdir}/metrics")
-
-
-# --- bucketed stage checkpoints ----------------------------------------------
-
-
-def _bucket_table_name(workdir: str, name: str) -> str:
-    """Deterministic catalog name for a workdir's bucketed stage table
-    (the metastore needs a name; the data lives under the workdir)."""
-    import hashlib
-
-    h = hashlib.md5(workdir.encode()).hexdigest()[:10]
-    return f"wiws_{h}_{name}"
-
-
-_BUCKET_SPEC_FILE = "_bucket_spec.json"
-
-
-def _write_bucket_spec(
-    spark: SparkSession, path: str, bucket_col: str, n_buckets: int
-) -> None:
-    """Persist the bucket layout beside the data (Hadoop FS, so the spec
-    travels with the checkpoint on object stores too). Resume validates
-    against it: the files, not the caller's current config, are the truth
-    about how the parquet is clustered."""
-    import json
-
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/{_BUCKET_SPEC_FILE}")
-    fs = p.getFileSystem(conf)
-    out = fs.create(p, True)
-    out.write(
-        bytearray(
-            json.dumps({"bucket_col": bucket_col, "n_buckets": n_buckets}).encode()
-        )
-    )
-    out.close()
-
-
-def _read_bucket_spec(spark: SparkSession, path: str) -> dict | None:
-    import json
-
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/{_BUCKET_SPEC_FILE}")
-    fs = p.getFileSystem(conf)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        # per-byte py4j reads: the spec is ~60 bytes, no classpath deps
-        data = bytearray()
-        b = stream.read()
-        while b != -1:
-            data.append(b)
-            b = stream.read()
-    finally:
-        stream.close()
-    try:
-        return json.loads(bytes(data).decode())
-    except ValueError:
-        return None
-
-
-def _ensure_bucket_table(
-    spark: SparkSession, tbl: str, path: str, bucket_col: str, n_buckets: int
-) -> None:
-    """Re-register an EXTERNAL bucketed table over an existing stage
-    checkpoint (a fresh session's metastore doesn't know last run's
-    tables; the parquet files + this DDL carry the full bucket layout)."""
-    if spark.catalog.tableExists(tbl):
-        return
-    schema = spark.read.parquet(path).schema
-    cols = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
-    )
-    spark.sql(
-        f"CREATE TABLE {tbl} ({cols}) USING PARQUET "
-        f"CLUSTERED BY (`{bucket_col}`) SORTED BY (`{bucket_col}`) "
-        f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-    )
 
 
 def stage_bucketed(
@@ -204,74 +242,18 @@ def stage_bucketed(
     run_id: str,
     name: str,
     compute,
-    bucket_col: str,
+    bucket_col: str | None = None,
     n_buckets: int = 16,
     resume: bool = True,
 ) -> DataFrame:
-    """``stage()`` with a BUCKETED checkpoint: the output is written as
-    an external parquet table bucketed (and sorted) on ``bucket_col``
-    under ``{workdir}/{name}``, and consumers get ``spark.table(...)``
-    so every later join on the bucket key — in this run or a resumed
-    one — reads the stored layout with ZERO Exchange on this side
-    (test_bucketed_join_is_shuffle_free is the plan contract; Iceberg's
-    bucket partition transform is the cluster twin). Plain
-    ``spark.read.parquet(path)`` still works for bucket-agnostic
-    readers (evaluate_run), it just doesn't see the layout."""
-    path = f"{workdir}/{name}"
-    tbl = _bucket_table_name(workdir, name)
-    if resume and _success_exists(spark, path):
-        spec = _read_bucket_spec(spark, path)
-        if spec == {"bucket_col": bucket_col, "n_buckets": n_buckets}:
-            _ensure_bucket_table(spark, tbl, path, bucket_col, n_buckets)
-            persisted = spark.table(tbl)
-        else:
-            # the checkpoint was written with a DIFFERENT layout (other
-            # bucket_stages config, or by plain stage() with no spec):
-            # registering CLUSTERED BY metadata the files don't satisfy
-            # would silently drop join matches (bucketed joins skip the
-            # Exchange) or fail with 'Invalid bucket file'. Fall back to
-            # a plain parquet read — correct, just with an Exchange —
-            # and drop any stale catalog entry so no one else trusts it.
-            import warnings
+    """Compatibility shim, read only by erbench's traced run until a
+    benchmark change drops it: ``stage()``, ignoring the layout
+    arguments (stage checkpoints are plain parquet)."""
+    return stage(spark, workdir, run_id, name, compute, resume)
 
-            warnings.warn(
-                f"stage_bucketed('{name}'): checkpoint bucket spec {spec} "
-                f"!= requested ({bucket_col}, {n_buckets}); resuming as a "
-                "plain (unbucketed) parquet read",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            persisted = spark.read.parquet(path)
-        try:
-            have = (
-                read_metrics(spark, workdir)
-                .where(F.col("stage") == name)
-                .limit(1)
-                .count()
-                > 0
-            )
-        except Exception:
-            have = False
-        if not have:  # same crash-window backfill as stage()
-            append_metrics(spark, workdir, run_id, name, persisted, wall_ms=0)
-        return persisted
-    t0 = time.monotonic()
-    out = compute()
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    (
-        out.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .option("path", path)
-        .saveAsTable(tbl)
-    )
-    _write_bucket_spec(spark, path, bucket_col, n_buckets)
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    persisted = spark.table(tbl)
-    append_metrics(spark, workdir, run_id, name, persisted, wall_ms)
-    return persisted
+
+def read_metrics(spark: SparkSession, workdir: str) -> DataFrame:
+    return spark.read.schema(METRICS_SCHEMA).parquet(f"{workdir}/metrics")
 
 
 # --- streaming counters -------------------------------------------------------
@@ -336,15 +318,10 @@ def append_streaming_metrics(
                 int((p.get("durationMs") or {}).get("triggerExecution", 0)),
             )
         )
-    if not rows:
-        return
-    # write schema = read schema minus the ts column (stamped below) —
-    # derived, not re-declared, so the two cannot drift
-    write_schema = STREAMING_METRICS_SCHEMA.rsplit(", ts timestamp", 1)[0]
-    df = spark.createDataFrame(rows, write_schema).withColumn(
-        "ts", F.current_timestamp()
-    )
-    df.coalesce(1).write.mode("append").parquet(f"{workdir}/metrics_streaming")
+    if rows:
+        _append_rows(
+            spark, f"{workdir}/metrics_streaming", STREAMING_METRICS_SCHEMA, rows
+        )
 
 
 def read_streaming_metrics(spark: SparkSession, workdir: str) -> DataFrame:
@@ -374,11 +351,7 @@ def append_run_counters(
     if not counters:
         return
     rows = [(run_id, query, k, int(v)) for k, v in sorted(counters.items())]
-    write_schema = RUN_COUNTERS_SCHEMA.rsplit(", ts timestamp", 1)[0]
-    df = spark.createDataFrame(rows, write_schema).withColumn(
-        "ts", F.current_timestamp()
-    )
-    df.coalesce(1).write.mode("append").parquet(f"{workdir}/counters")
+    _append_rows(spark, f"{workdir}/counters", RUN_COUNTERS_SCHEMA, rows)
 
 
 def read_run_counters(spark: SparkSession, workdir: str) -> DataFrame:

@@ -81,10 +81,9 @@ class ERConfig:
     use_propagation: bool = False
     propagation_iterations: int = 2
     propagation_beta: float = 0.5
-    # bucketed stage checkpoints: payload/embeddings/blocks bucketed on
-    # url and pairs on url_a, so every later join on those keys — in
-    # this run or a resumed one — reads the stored layout without an
-    # Exchange on that side (metrics.stage_bucketed; 0 = plain parquet)
+    # inert compatibility field, read only by erbench's traced run (as
+    # the layout argument of the metrics.stage_bucketed shim) until a
+    # benchmark change drops it; stage checkpoints are plain parquet
     bucket_stages: int = 16
 
 
@@ -129,16 +128,10 @@ def run_pipeline(
     """
     run_id = run_id or M.new_run_id()
 
-    def _stage(name, compute, bucket_col=None):
-        if cfg.bucket_stages and bucket_col is not None:
-            return M.stage_bucketed(
-                spark, workdir, run_id, name, compute,
-                bucket_col=bucket_col, n_buckets=cfg.bucket_stages,
-                resume=cfg.resume,
-            )
+    def _stage(name, compute):
         return M.stage(spark, workdir, run_id, name, compute, cfg.resume)
 
-    payload = _stage("extract", lambda: extract_stage(pages), bucket_col="url")
+    payload = _stage("extract", lambda: extract_stage(pages))
 
     if embeddings is None:
 
@@ -154,7 +147,7 @@ def run_pipeline(
                 model=model, docs=corpus, id_col="url", tokens_col="tokens"
             ).select("url", "embedding")
 
-        embeddings = _stage("embeddings", _w2v_embeddings, bucket_col="url")
+        embeddings = _stage("embeddings", _w2v_embeddings)
 
     def _blocks():
         b = lsh_block_keys(
@@ -165,7 +158,7 @@ def run_pipeline(
         )
         return cap_block_size(b, cfg.block_cap)
 
-    blocks = _stage("blocks", _blocks, bucket_col="url")
+    blocks = _stage("blocks", _blocks)
 
     def _pairs():
         pay = payload.select("url", "title", "title_tokens", "text_tokens").join(
@@ -189,16 +182,9 @@ def run_pipeline(
             "score",
         )
 
-    pairs = _stage("pairs", _pairs, bucket_col="url_a")
+    pairs = _stage("pairs", _pairs)
 
-    edges = M.stage(
-        spark,
-        workdir,
-        run_id,
-        "edges",
-        lambda: threshold_edges(pairs, cfg.threshold),
-        cfg.resume,
-    )
+    edges = _stage("edges", lambda: threshold_edges(pairs, cfg.threshold))
 
     if cfg.cluster_method in ("dbscan", "consensus"):
 
@@ -322,9 +308,7 @@ def run_pipeline(
             return post_match(clusters0, pairs, outliers, cfg.threshold)
 
         if cfg.cluster_method == "dbscan":
-            return M.stage(
-                spark, workdir, run_id, "clusters", _dbscan_clusters, cfg.resume
-            )
+            return _stage("clusters", _dbscan_clusters)
 
         def _consensus_clusters():
             from whoiswho_spark.operators.consensus import consensus_clusters
@@ -356,14 +340,9 @@ def run_pipeline(
                 stacked = stacked.unionByName(r)
             return consensus_clusters(stacked, min_agree=cfg.consensus_min_agree)
 
-        return M.stage(
-            spark, workdir, run_id, "clusters", _consensus_clusters, cfg.resume
-        )
+        return _stage("clusters", _consensus_clusters)
 
-    clusters = M.stage(
-        spark,
-        workdir,
-        run_id,
+    return _stage(
         "clusters",
         lambda: connected_components(
             edges,
@@ -375,9 +354,7 @@ def run_pipeline(
             checkpoint_dir=f"{workdir}/cc_checkpoints",
             resume=cfg.resume,
         ),
-        cfg.resume,
     )
-    return clusters
 
 
 def evaluate_run(
