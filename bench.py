@@ -94,30 +94,23 @@ def _er_pipeline_bench(spark, sf_dir: str) -> tuple[int, float]:
     returns (pairs scored, wall seconds)."""
     import pyspark.sql.functions as F
 
-    from whoiswho_spark.operators.blocking import minhash_signature_cols
+    from whoiswho_spark.operators.blocking import band_hash_sql, minhash_signature_sql
     from whoiswho_spark.operators.clustering import connected_components
-    from whoiswho_spark.operators.dedup import _jaccard_sets_memo_udf, tokens_col
+    from whoiswho_spark.operators.dedup import _jaccard_sets_memo_udf, tokens_sql
 
     t0 = time.monotonic()
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # tokenize+dedupe once; signatures share the array (dedup.
     # _distinct_tokens_first pattern — identical hashes, ~4× cheaper)
-    base = docs.select(
-        F.col("doc_id").cast("string").alias("url"),
+    base = docs.selectExpr(
+        "CAST(doc_id AS STRING) AS url",
         "source",
-        F.array_distinct(tokens_col(F.col("text"))).alias("toks"),
+        f"array_distinct({tokens_sql('text')}) AS toks",
     )
-    sig = minhash_signature_cols(F.col("toks"), 4)
-    blocks = base.select(
-        "url",
-        F.concat_ws(
-            "|",
-            F.col("source"),
-            F.substring(
-                F.md5(F.concat_ws("_", *[s.cast("string") for s in sig[:2]])), 1, 16
-            ),
-        ).alias("block_key"),
-        F.col("toks"),
+    # the first band's bucket (its two leading minhashes)
+    band0 = band_hash_sql(minhash_signature_sql("toks", 4)[:2], 2)[0]
+    blocks = base.selectExpr(
+        "url", f"concat_ws('|', source, substring({band0}, 1, 16)) AS block_key", "toks"
     )
     a = blocks.select("block_key", F.col("url").alias("url_a"), F.col("toks").alias("toks_a"))
     b = blocks.select("block_key", F.col("url").alias("url_b"), F.col("toks").alias("toks_b"))

@@ -106,6 +106,25 @@ def test_pairs_dedupe_across_bands(spark):
     assert (got[0]["url_a"], got[0]["url_b"]) == ("u1", "u2")
 
 
+def test_candidate_pairs_unique_on_url_pair(spark):
+    """Both pair generators emit each (url_a, url_b) once, payload attached,
+    even when two urls share every LSH band's block: the precondition for
+    threshold_edges keeping one edge per pair row with no distinct."""
+    bands = [(u, f"h|{b}|k") for u in ("u1", "u2", "u3") for b in range(4)]
+    blocks = spark.createDataFrame(
+        bands + [("u1", "x"), ("u2", "x")], "url string, block_key string"
+    )
+    payload = spark.createDataFrame(
+        [("u1", 1), ("u2", 2), ("u3", 3)], "url string, n int"
+    )
+    for pairs in (
+        candidate_pairs(blocks, payload=payload),
+        salted_candidate_pairs(blocks, n_salts=4, payload=payload),
+    ):
+        got = sorted((r["url_a"], r["url_b"]) for r in pairs.collect())
+        assert got == [("u1", "u2"), ("u1", "u3"), ("u2", "u3")]
+
+
 def test_cap_block_size(spark):
     rows = [(f"u{i:03d}", "big") for i in range(100)] + [("x", "small")]
     blocks = spark.createDataFrame(rows, "url string, block_key string")

@@ -439,3 +439,38 @@ def test_cc_cross_path_resume_wipes_checkpoints(spark, tmp_path):
     assert marker() == "small1"
     assert iter_mtime() != enc_mtime
     assert sorted(d for d in os.listdir(ckpt) if d.startswith("iter_")) == ["iter_0"]
+
+
+def test_cc_known_count_skips_checksum_and_stores_no_key(spark, tmp_path, monkeypatch):
+    """A caller-known edge count within the local-finish bound, with
+    resume=False, replaces the input checksum: the union-find labels the
+    nodes directly (oracle parity), nothing is left in the checkpoint dir,
+    and a later resumed run finds no key and recomputes the same labels."""
+    import os
+
+    from whoiswho_spark.operators import clustering as C
+
+    rng = random.Random(13)
+    nodes, edges = _random_string_graph(rng, 30, 50)
+    edges += [("9", "10")]
+    want = _union_find(edges, nodes)
+    edf = spark.createDataFrame(edges, "src string, dst string")
+    vdf = spark.createDataFrame([(x,) for x in nodes], "url string")
+    ckpt = str(tmp_path / "cc")
+    os.makedirs(f"{ckpt}/iter_0")  # a stale dir: resume=False wipes it
+
+    def _no_aggregate(*_a, **_k):
+        raise AssertionError("known-count run aggregated the input")
+
+    with monkeypatch.context() as m:
+        m.setattr(C.DataFrame, "agg", _no_aggregate)
+        cc = connected_components(
+            edf, vertices=vdf, checkpoint_dir=ckpt, resume=False,
+            input_count=len(edges),
+        )
+        known = {r["url"]: r["cluster_id"] for r in cc.collect()}
+    assert known == want
+    assert not os.path.exists(ckpt)
+    resumed = connected_components(edf, vertices=vdf, checkpoint_dir=ckpt)
+    assert {r["url"]: r["cluster_id"] for r in resumed.collect()} == want
+    assert os.path.exists(f"{ckpt}/input_checksum/_SUCCESS")

@@ -3,6 +3,7 @@ logistic stand-in lacks, deterministic fits, and Catalyst-expr inference
 identical to the numpy path."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from whoiswho_spark.operators.gbdt import (
@@ -190,3 +191,16 @@ def test_fit_sample_is_uniform_not_feature_ordered(spark):
     # still the cheap top-K physical plan, not a full sort
     plan = s._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_gbdt_refuses_null_feature_or_label(spark):
+    """toPandas turns a NULL into NaN; the fit must refuse it rather
+    than learn from NaN gains."""
+    rows = [(float(i % 7), float(i % 3), float(i % 2)) for i in range(60)]
+    schema = "f0 double, f1 double, label double"
+    null_feature = spark.createDataFrame(rows + [(None, 1.0, 0.0)], schema)
+    with pytest.raises(ValueError, match="f0"):
+        fit_gbdt(null_feature, ["f0", "f1"], n_trees=2)
+    null_label = spark.createDataFrame(rows + [(1.0, 1.0, None)], schema)
+    with pytest.raises(ValueError, match="label"):
+        fit_gbdt(null_label, ["f0", "f1"], n_trees=2)

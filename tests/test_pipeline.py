@@ -252,6 +252,24 @@ def test_stage_empty_output_records_zero_row(spark, workdir):
     assert [(r["stage"], r["rows_out"]) for r in rows] == [("edges", 0)]
 
 
+def test_append_rows_round_trips_awkward_literals(spark, tmp_path):
+    """Metric rows travel as SQL-text literals: quotes, backslashes,
+    non-ASCII, NULL and 64-bit values come back exactly."""
+    from whoiswho_spark.plans import metrics as M
+
+    path = str(tmp_path / "counters")
+    rows = [
+        ("r'1", "q\\x\\'y", "naïve—\u00e9", 2**62),
+        ("r2", "q", "k", None),
+    ]
+    M._append_rows(spark, path, M.RUN_COUNTERS_SCHEMA, rows)
+    got = sorted(
+        (r["run_id"], r["query"], r["key"], r["value"])
+        for r in spark.read.parquet(path).collect()
+    )
+    assert got == sorted(rows)
+
+
 def test_stage_restores_caller_job_group(spark, tmp_path):
     """stage() runs its write under its own job group; the caller's job
     group and description are back in place afterwards."""
@@ -272,6 +290,124 @@ def test_stage_restores_caller_job_group(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
         sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+
+def test_run_pipeline_appends_lineage_once(spark, corpus, workdir):
+    """run_pipeline buffers its stages' lineage rows and appends them in
+    one write at the end (one metrics file), not one append per stage."""
+    import glob
+
+    from whoiswho_spark.plans import metrics as M
+
+    wd = f"{workdir}/one_append"
+    shutil.rmtree(wd, ignore_errors=True)
+    pages, embs, _ = _split(corpus)
+    run_pipeline(spark, pages, embs, wd, ERConfig(resume=False))
+    assert len(glob.glob(f"{wd}/metrics/part-*")) == 1
+    stages = {r["stage"] for r in M.read_metrics(spark, wd).collect()}
+    assert stages == {"extract", "blocks", "pairs", "edges", "clusters"}
+
+
+def test_lineage_crash_window_backfilled_on_resume(spark, corpus, workdir, monkeypatch):
+    """A run killed after its stage writes but before the lineage flush
+    leaves complete checkpoints and no metrics rows; the resumed run
+    backfills every stage from its checkpoint (wall_ms = 0)."""
+    from whoiswho_spark.plans import metrics as M
+
+    wd = f"{workdir}/crash_window"
+    shutil.rmtree(wd, ignore_errors=True)
+    pages, embs, _ = _split(corpus)
+    with monkeypatch.context() as m:
+        m.setattr(M, "flush_lineage", lambda *_a, **_k: None)  # killed first
+        run_pipeline(spark, pages, embs, wd)
+    assert not os.path.exists(f"{wd}/metrics")
+    run_pipeline(spark, pages, embs, wd)
+    rows = M.read_metrics(spark, wd).collect()
+    sums = {}
+    for r in rows:
+        assert r["wall_ms"] == 0, r
+        sums[r["stage"]] = sums.get(r["stage"], 0) + r["rows_out"]
+    assert set(sums) == {"extract", "blocks", "pairs", "edges", "clusters"}
+    for name, n in sums.items():
+        assert n == spark.read.parquet(f"{wd}/{name}").count(), name
+
+
+def test_lineage_flushed_when_a_stage_fails(spark, corpus, workdir, monkeypatch):
+    """The buffered lineage of the stages that completed is written even
+    when a later stage raises."""
+    import pytest
+
+    from whoiswho_spark.plans import metrics as M
+    from whoiswho_spark.plans import pipeline as P
+
+    def _boom(*_a, **_k):
+        raise RuntimeError("clustering failed")
+
+    monkeypatch.setattr(P, "connected_components", _boom)
+    wd = f"{workdir}/failed_run"
+    shutil.rmtree(wd, ignore_errors=True)
+    pages, embs, _ = _split(corpus)
+    with pytest.raises(RuntimeError, match="clustering failed"):
+        run_pipeline(spark, pages, embs, wd, ERConfig(resume=False))
+    stages = {r["stage"] for r in M.read_metrics(spark, wd).collect()}
+    assert stages == {"extract", "blocks", "pairs", "edges"}
+
+
+def test_blocks_skip_cap_when_pages_within_cap(spark, corpus, workdir, monkeypatch):
+    """A block holds at most one row per page, so when the extract stage
+    wrote no more pages than block_cap the cap's window is skipped; with
+    more pages than the cap it still caps."""
+    from whoiswho_spark.plans import pipeline as P
+
+    calls = []
+    real = P.cap_block_size
+    monkeypatch.setattr(
+        P, "cap_block_size", lambda b, cap: calls.append(cap) or real(b, cap)
+    )
+    pages, embs, _ = _split(corpus)
+    wd = f"{workdir}/cap_skipped"
+    run_pipeline(spark, pages, embs, wd, ERConfig(resume=False))
+    assert calls == []
+    wd = f"{workdir}/cap_applied"
+    run_pipeline(spark, pages, embs, wd, ERConfig(resume=False, block_cap=3))
+    assert calls == [3]
+    biggest = (
+        spark.read.parquet(f"{wd}/blocks").groupBy("block_key").count()
+        .agg(F.max("count")).first()[0]
+    )
+    assert biggest <= 3
+
+
+def _max_job_id(spark) -> int:
+    """The status store's highest job id, its listener bus drained."""
+    import json
+
+    from whoiswho_spark.plans.metrics import _json_mapper
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = _json_mapper(sc._jvm).writeValueAsString(jsc.statusStore().jobsList(None))
+    return max(j["jobId"] for j in json.loads(jobs))
+
+
+# Spark jobs of one warm resume=False run_pipeline op on the test corpus
+# (local[8]), as measured over repeated ops (16 each time). The pipeline
+# before the one-append lineage, the planning row counts and the
+# distinct-free edges ran 26.
+SND_JOB_BUDGET = 16
+
+
+def test_snd_op_job_budget(spark, corpus, workdir):
+    """A warm op's Spark jobs (status-store job-id delta) stay within the
+    budget: each job is a fixed cost that dominates at this scale."""
+    pages, embs, _ = _split(corpus)
+    cfg = ERConfig(resume=False)
+    run_pipeline(spark, pages, embs, f"{workdir}/budget_warm", cfg)
+    j0 = _max_job_id(spark)
+    run_pipeline(spark, pages, embs, f"{workdir}/budget", cfg)
+    jobs = _max_job_id(spark) - j0
+    assert jobs <= SND_JOB_BUDGET, f"{jobs} jobs > budget {SND_JOB_BUDGET}"
 
 
 def test_eval_restricted_to_shared_block_pairs(spark, corpus, workdir):

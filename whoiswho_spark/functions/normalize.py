@@ -20,9 +20,10 @@ then tokenizes with field-specific filters:
 
 Two implementations with identical output on the corpus domain:
 
-1. ``norm_text_col`` / ``*_tokens_col`` — pure Catalyst exprs (lower/trim/
-   regexp_replace/split/filter): JVM-side, whole-stage-codegen'd; the hot
-   path at 100 TB.
+1. ``norm_text_sql`` / ``*_tokens_sql`` — pure Catalyst exprs (lower/trim/
+   regexp_replace/split/filter) built as SQL text (one JVM call per
+   chain; ``*_col`` wraps them as Columns): JVM-side, whole-stage-
+   codegen'd; the hot path at 100 TB.
 2. ``extract_text_udf`` — an Arrow-batched pandas UDF that runs the
    *reference's own* regex chain in Python ``re``; this is the
    byte-identical contract column for html→text extraction and the oracle
@@ -51,58 +52,85 @@ from whoiswho_spark.constants import (
     STOPWORDS_CHECK,
     STOPWORDS_EXTEND,
 )
+from whoiswho_spark.functions.sqltext import sql_str, sql_text
 
 # ---------------------------------------------------------------------------
-# Catalyst expression builders (JVM hot path)
+# Catalyst expressions (JVM hot path), built as SQL text
 # ---------------------------------------------------------------------------
+# Each ``*_sql`` function maps the SQL text of its input to the SQL text of
+# the result, so a whole chain costs one ``F.expr`` / ``selectExpr`` call
+# (functions/sqltext.py); the ``*_col`` forms wrap it for Column callers.
 
 _UNI_TRIM = r"(?U)^\s+|(?U)\s+$"
 _UNI_WS2 = r"(?U)\s{2,}"
 
 
-def norm_text_col(col: Column) -> Column:
-    """strip → lower → puncs→' ' → collapse-ws → strip, as Catalyst exprs."""
-    c = F.regexp_replace(col, _UNI_TRIM, "")
-    c = F.lower(c)
-    c = F.regexp_replace(c, PUNCS, " ")
-    c = F.regexp_replace(c, _UNI_WS2, " ")
-    return F.regexp_replace(c, _UNI_TRIM, "")
+def norm_text_sql(x: str) -> str:
+    """strip → lower → puncs→' ' → collapse-ws → strip, over the SQL
+    expression ``x``."""
+    c = f"regexp_replace({x}, {sql_str(_UNI_TRIM)}, '')"
+    c = f"regexp_replace(lower({c}), {sql_str(PUNCS)}, ' ')"
+    c = f"regexp_replace({c}, {sql_str(_UNI_WS2)}, ' ')"
+    return f"regexp_replace({c}, {sql_str(_UNI_TRIM)}, '')"
 
 
-def _filtered_tokens(norm: Column, min_len: int, *stoplists: list[str]) -> Column:
-    toks = F.split(norm, " ")
-    toks = F.filter(toks, lambda t: F.length(t) > min_len)
-    drop = sorted({w for sl in stoplists for w in sl})
-    # array filter with an isin literal set stays inside codegen; NOT
+def _filtered_tokens_sql(norm: str, min_len: int, *stoplists: list[str]) -> str:
+    drop = ", ".join(sql_str(w) for w in sorted({w for sl in stoplists for w in sl}))
+    # array filter with an IN literal set stays inside codegen; NOT
     # array_except (that would also dedupe, breaking the title-list contract)
-    return F.filter(toks, lambda t: ~t.isin(*drop))
-
-
-def title_tokens_col(norm_title: Column) -> Column:
-    """Title tokens: len>1, −STOPWORDS −STOPWORDS_CHECK, duplicates kept."""
-    return _filtered_tokens(norm_title, 1, STOPWORDS, STOPWORDS_CHECK)
-
-
-def org_tokens_col(norm_org: Column) -> Column:
-    """Org tokens: len>1, −STOPWORDS −STOPWORDS_EXTEND, then per-row dedupe
-    (``array_distinct`` ≡ the reference's ``set()`` at data_process.py:184;
-    order differences are immaterial because all consumers are set-ops)."""
-    return F.array_distinct(
-        _filtered_tokens(norm_org, 1, STOPWORDS, STOPWORDS_EXTEND)
+    return (
+        f"filter(filter(split({norm}, ' '), tok -> length(tok) > {min_len}), "
+        f"tok -> NOT (tok IN ({drop})))"
     )
 
 
-def venue_tokens_col(norm_venue: Column) -> Column:
+def title_tokens_sql(norm_title: str) -> str:
+    """Title tokens: len>1, −STOPWORDS −STOPWORDS_CHECK, duplicates kept."""
+    return _filtered_tokens_sql(norm_title, 1, STOPWORDS, STOPWORDS_CHECK)
+
+
+def org_tokens_sql(norm_org: str) -> str:
+    """Org tokens: len>1, −STOPWORDS −STOPWORDS_EXTEND, then per-row dedupe
+    (``array_distinct`` ≡ the reference's ``set()`` at data_process.py:184;
+    order differences are immaterial because all consumers are set-ops)."""
+    return f"array_distinct({_filtered_tokens_sql(norm_org, 1, STOPWORDS, STOPWORDS_EXTEND)})"
+
+
+def venue_tokens_sql(norm_venue: str) -> str:
     """Venue tokens: len>1, −all three stoplists; empty → ['null']
     (data_process.py:201-202)."""
-    toks = _filtered_tokens(norm_venue, 1, STOPWORDS, STOPWORDS_EXTEND, STOPWORDS_CHECK)
-    return F.when(F.size(toks) == 0, F.array(F.lit("null"))).otherwise(toks)
+    toks = _filtered_tokens_sql(
+        norm_venue, 1, STOPWORDS, STOPWORDS_EXTEND, STOPWORDS_CHECK
+    )
+    return f"CASE WHEN size({toks}) = 0 THEN array('null') ELSE {toks} END"
 
 
-def corpus_tokens_col(norm_text: Column) -> Column:
+def corpus_tokens_sql(norm_text: str) -> str:
     """Embedding-corpus tokens: len>2, −all three stoplists
     (semantic_features.py:117-121)."""
-    return _filtered_tokens(norm_text, 2, STOPWORDS, STOPWORDS_EXTEND, STOPWORDS_CHECK)
+    return _filtered_tokens_sql(
+        norm_text, 2, STOPWORDS, STOPWORDS_EXTEND, STOPWORDS_CHECK
+    )
+
+
+def norm_text_col(col: Column | str) -> Column:
+    return F.expr(norm_text_sql(sql_text(col)))
+
+
+def title_tokens_col(norm_title: Column | str) -> Column:
+    return F.expr(title_tokens_sql(sql_text(norm_title)))
+
+
+def org_tokens_col(norm_org: Column | str) -> Column:
+    return F.expr(org_tokens_sql(sql_text(norm_org)))
+
+
+def venue_tokens_col(norm_venue: Column | str) -> Column:
+    return F.expr(venue_tokens_sql(sql_text(norm_venue)))
+
+
+def corpus_tokens_col(norm_text: Column | str) -> Column:
+    return F.expr(corpus_tokens_sql(sql_text(norm_text)))
 
 
 def year_sanitize_col(year: Column) -> Column:

@@ -7,8 +7,9 @@ downstream stage per block. Our block key is ``normalized host`` +
 
 Design for 100 TB:
 - MinHash signatures are pure Catalyst exprs (md5-based 60-bit hash
-  family → ``array_min`` over ``transform``): whole-stage codegen, zero
-  Python, zero shuffle to compute. The hash family is deterministic and
+  family → ``array_min`` over ``transform``), built as SQL text (one JVM
+  call per expression): whole-stage codegen, zero Python, zero shuffle
+  to compute. The hash family is deterministic and
   engine-portable (same values in DuckDB SQL → oracle-checkable).
 - one ``explode`` over bands → (url, block_key); the only shuffle in this
   stage is the downstream self-join's exchange on block_key.
@@ -24,50 +25,83 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from whoiswho_spark.functions.normalize import norm_text_col, title_tokens_col
+from whoiswho_spark.functions.normalize import norm_text_sql, title_tokens_sql
+from whoiswho_spark.functions.sqltext import sql_str, sql_text
 
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BANDS = 4
 
 
-def hash60(col: Column, salt: str | int) -> Column:
-    """Deterministic 60-bit hash: first 15 hex chars of md5(token ':' salt).
+def hash60_sql(x: str, salt: str | int) -> str:
+    """Deterministic 60-bit hash of the SQL expression ``x``: first 15
+    hex chars of md5(x ':' salt).
 
     Portable across engines: Spark ``conv(substr(md5(..)))`` and DuckDB
     ``('0x' || substring(md5(..)))::BIGINT`` produce identical values —
     blocking keys are byte-stable across runs and engines.
     """
-    return F.conv(
-        F.substring(F.md5(F.concat(col, F.lit(f":{salt}"))), 1, 15), 16, 10
-    ).cast("bigint")
+    return (
+        f"CAST(conv(substring(md5(concat({x}, {sql_str(f':{salt}')})), 1, 15), "
+        "16, 10) AS BIGINT)"
+    )
 
 
-def normalized_host_col(url: Column) -> Column:
-    """Host from url, lowercased, leading 'www.' stripped. The url is
-    lowercased BEFORE the scheme regex: RFC 3986 schemes are
-    case-insensitive ('HTTP://…' is legal crawl data) and extracting
-    from the raw string would return '' for them — collapsing every
-    uppercase-scheme url into one shared empty-host block."""
-    host = F.regexp_extract(F.lower(url), r"^[a-z][a-z0-9+.-]*://([^/:?#]+)", 1)
-    return F.regexp_replace(host, r"^www\.", "")
+def hash60(col: Column | str, salt: str | int) -> Column:
+    """``hash60_sql`` as a Column (a str is SQL text, e.g. a column name)."""
+    return F.expr(hash60_sql(sql_text(col), salt))
 
 
-def minhash_signature_cols(tokens: Column, num_hashes: int) -> list[Column]:
-    """k independent MinHash values over a token array — array_min over a
-    per-hash transform; empty/null token arrays hash a sentinel so every
-    row gets a block (singleton blocks are harmless)."""
-    safe = F.when(
-        tokens.isNull() | (F.size(tokens) == 0), F.array(F.lit("__empty__"))
-    ).otherwise(tokens)
+_HOST_RE = r"^[a-z][a-z0-9+.-]*://([^/:?#]+)"
+_WWW_RE = r"^www\."
 
-    def _hash_fn(k: int):
-        # Must be a UNARY lambda: a two-parameter lambda (e.g. the
-        # `lambda t, k=k:` closure idiom) is interpreted by transform() as
-        # its (element, index) binary form, silently passing the index
-        # column as the second arg.
-        return lambda t: hash60(t, k)
 
-    return [F.array_min(F.transform(safe, _hash_fn(k))) for k in range(num_hashes)]
+def normalized_host_sql(url: str) -> str:
+    """Host from the url SQL expression ``url``, lowercased, leading
+    'www.' stripped. The url is lowercased BEFORE the scheme regex: RFC
+    3986 schemes are case-insensitive ('HTTP://…' is legal crawl data)
+    and extracting from the raw string would return '' for them —
+    collapsing every uppercase-scheme url into one shared empty-host
+    block."""
+    host = f"regexp_extract(lower({url}), {sql_str(_HOST_RE)}, 1)"
+    return f"regexp_replace({host}, {sql_str(_WWW_RE)}, '')"
+
+
+def normalized_host_col(url: Column | str) -> Column:
+    return F.expr(normalized_host_sql(sql_text(url)))
+
+
+def minhash_signature_sql(tokens: str, num_hashes: int) -> list[str]:
+    """k independent MinHash values over the token-array SQL expression
+    ``tokens`` — array_min over a per-hash transform; empty/null token
+    arrays hash a sentinel so every row gets a block (singleton blocks
+    are harmless)."""
+    safe = (
+        f"CASE WHEN {tokens} IS NULL OR size({tokens}) = 0 "
+        f"THEN array('__empty__') ELSE {tokens} END"
+    )
+    return [
+        f"array_min(transform({safe}, tok -> {hash60_sql('tok', k)}))"
+        for k in range(num_hashes)
+    ]
+
+
+def minhash_signature_cols(tokens: Column | str, num_hashes: int) -> list[Column]:
+    """``minhash_signature_sql`` as Columns."""
+    return [F.expr(h) for h in minhash_signature_sql(sql_text(tokens), num_hashes)]
+
+
+def band_hash_sql(sig: list[str], rows_per_band: int) -> list[str]:
+    """One md5 per LSH band over its ``rows_per_band`` signature values
+    joined by '_' — THE band bucket definition, shared by the blocking
+    keys, the dedup buckets and the streaming dedup twin, so a document
+    lands in byte-identical buckets everywhere by construction."""
+    r = rows_per_band
+    return [
+        "md5(concat_ws('_', "
+        + ", ".join(f"CAST({p} AS STRING)" for p in sig[b * r : (b + 1) * r])
+        + "))"
+        for b in range(len(sig) // r)
+    ]
 
 
 def lsh_block_keys(
@@ -89,27 +123,18 @@ def lsh_block_keys(
             f"num_hashes={num_hashes} must be divisible by bands={bands}: "
             "the trailing hashes would be computed and silently discarded"
         )
-    rows_per_band = num_hashes // bands
     # tokenize + dedupe ONCE in a prior projection so the per-hash
     # columns share the array instead of re-running the split (see
     # dedup._distinct_tokens_first — ~4× cheaper signatures)
-    base = df.select(
-        F.col(url),
-        F.col(host),
-        F.array_distinct(title_tokens_col(norm_text_col(F.col(title)))).alias("_toks"),
+    base = df.selectExpr(
+        url, host, f"array_distinct({title_tokens_sql(norm_text_sql(title))}) AS _toks"
     )
-    sig = minhash_signature_cols(F.col("_toks"), num_hashes)
-    band_keys = []
-    for b in range(bands):
-        parts = sig[b * rows_per_band : (b + 1) * rows_per_band]
-        band_hash = F.md5(F.concat_ws("_", *[p.cast("string") for p in parts]))
-        band_keys.append(
-            F.concat_ws("|", F.col(host), F.lit(str(b)), F.substring(band_hash, 1, 16))
-        )
-    return base.select(
-        F.col(url),
-        F.explode(F.array(*band_keys)).alias("block_key"),
-    )
+    sig = minhash_signature_sql("_toks", num_hashes)
+    keys = [
+        f"concat_ws('|', {host}, '{b}', substring({h}, 1, 16))"
+        for b, h in enumerate(band_hash_sql(sig, num_hashes // bands))
+    ]
+    return base.selectExpr(url, f"explode(array({', '.join(keys)})) AS block_key")
 
 
 def cap_block_size(blocks: DataFrame, cap: int, order_col: str = "url") -> DataFrame:
@@ -119,7 +144,7 @@ def cap_block_size(blocks: DataFrame, cap: int, order_col: str = "url") -> DataF
     (secondary key on the raw column breaks 60-bit hash-collision ties —
     same discipline as rnd.deterministic_sample)."""
     w = Window.partitionBy("block_key").orderBy(
-        hash60(F.col(order_col), "cap"), F.asc(order_col)
+        hash60(order_col, "cap"), F.asc(order_col)
     )
     return (
         blocks.withColumn("_rn", F.row_number().over(w))

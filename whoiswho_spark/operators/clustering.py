@@ -30,12 +30,16 @@ def threshold_edges(
     dst: str = "url_b",
 ) -> DataFrame:
     """Keep pairs with score ≥ threshold (the ≥1.5 attach rule of
-    AutoTrainSND.py:194) → edges(src, dst)."""
+    AutoTrainSND.py:194) → edges(src, dst), one edge per input row.
+
+    No dedup: the pipeline's pairs are unique on (url_a, url_b)
+    (``candidate_pairs`` groups on them), and connected components of a
+    multigraph equal those of its simple graph, so a distinct here would
+    be one shuffle spent on nothing."""
     return (
         scored_pairs.where(F.col(score_col) >= threshold)
-        .select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
+        .selectExpr(f"{src} AS src", f"{dst} AS dst")
+        .where("src != dst")
     )
 
 
@@ -158,11 +162,13 @@ def _encode_edges(edges: DataFrame, ranks: DataFrame, n_nodes: int) -> DataFrame
     )
 
 
-def _local_union_find_star(edges: DataFrame) -> DataFrame:
+def _local_union_find_star(edges: DataFrame, roots: bool = False) -> DataFrame:
     """Single-task union-find finishing pass: an edge set already below
     the in-memory bound → its fixpoint star edge set (node, component-min
     root), node != root — exactly what the large-star/small-star loop
     would converge to, in ONE task instead of O(log n) more rounds.
+    ``roots=True`` also emits (root, root), so the output is one label
+    row per node.
 
     Union-by-min keeps the root the component minimum under Python
     code-point order, which equals Spark's UTF8String byte order (UTF-8
@@ -200,7 +206,7 @@ def _local_union_find_star(edges: DataFrame) -> DataFrame:
         out_s, out_d = [], []
         for x in nodes:
             r = find(x)
-            if r != x:
+            if roots or r != x:
                 out_s.append(x)
                 out_d.append(r)
         yield pd.DataFrame({s_name: out_s, d_name: out_d})
@@ -272,6 +278,7 @@ def connected_components(
     checkpoint_dir: str | None = None,
     resume: bool = True,
     local_finish_threshold: int = 1_000_000,
+    input_count: int | None = None,
 ) -> DataFrame:
     """edges(src, dst) → (url, cluster_id STRING = component-min node id).
 
@@ -307,6 +314,14 @@ def connected_components(
 
     ``vertices`` (column ``url``): optional universe; isolated vertices
     become singleton clusters labeled by themselves.
+
+    ``input_count``: the row count of ``edges`` when the caller already
+    has it (the pipeline passes its edges stage's write count). With
+    ``resume=False`` a count within the local-finish bound stands in for
+    the input checksum (two Spark jobs): the union-find labels the nodes
+    at once, and neither an input key nor an iteration file is stored,
+    so a later resumed run finds no key and recomputes. A resumed run
+    ignores it — the checksum is the resume key.
     """
     spark = edges.sparkSession
     # Round 6: no input ``.distinct()`` — connected components of a
@@ -371,6 +386,17 @@ def connected_components(
         # the dictionary encode, the encoded checksum, the lineage cuts
         # and the decode joins only pay when star rounds run.
         return 0 < local_finish_threshold and n <= local_finish_threshold
+
+    if input_count is not None and not resume and _is_small(input_count):
+        # no input key is stored, so no later run would resume from an
+        # iteration file: the union-find's label rows are the answer,
+        # consumed once and never persisted
+        if checkpoint_dir is not None:
+            _delete_path(spark, checkpoint_dir)
+        labels = _local_union_find_star(edges, roots=True).select(
+            F.col("src").alias("url"), F.col("dst").alias("cluster_id")
+        )
+        return _attach_vertices(labels, vertices)
 
     cut = False  # is ``edges`` already a localCheckpoint of the input?
     if checkpoint_dir is None:
@@ -526,14 +552,20 @@ def connected_components(
                 F.col("_cid_node").alias("cluster_id"),
             )
         )
-    if vertices is not None:
-        labels = (
-            vertices.select("url")
-            .distinct()
-            .join(labels, "url", "left")
-            .select("url", F.coalesce("cluster_id", F.col("url")).alias("cluster_id"))
-        )
-    return labels
+    return _attach_vertices(labels, vertices)
+
+
+def _attach_vertices(labels: DataFrame, vertices: DataFrame | None) -> DataFrame:
+    """Labels over the ``vertices`` universe: a vertex with no edge is a
+    singleton cluster labeled by itself."""
+    if vertices is None:
+        return labels
+    return (
+        vertices.select("url")
+        .distinct()
+        .join(labels, "url", "left")
+        .select("url", F.coalesce("cluster_id", F.col("url")).alias("cluster_id"))
+    )
 
 
 def post_match(

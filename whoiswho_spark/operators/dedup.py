@@ -27,7 +27,12 @@ from pyspark.sql.types import LongType
 from pyspark.sql.window import Window
 
 from whoiswho_spark.functions.similarity import tanimoto_col
-from whoiswho_spark.operators.blocking import hash60, minhash_signature_cols
+from whoiswho_spark.functions.sqltext import sql_text
+from whoiswho_spark.operators.blocking import (
+    band_hash_sql,
+    hash60,
+    minhash_signature_sql,
+)
 
 
 def exact_dedup(
@@ -48,10 +53,15 @@ def exact_dedup(
     )
 
 
-def tokens_col(text: Column) -> Column:
+def tokens_sql(text: str) -> str:
     """Whitespace tokens, empties dropped — the shared tokenizer for the
-    dedup family (must stay portable to the DuckDB oracle)."""
-    return F.filter(F.split(text, " "), lambda _tk: F.length(_tk) > 0)
+    dedup family (must stay portable to the DuckDB oracle), as SQL text
+    over the SQL expression ``text``."""
+    return f"filter(split({text}, ' '), tk -> length(tk) > 0)"
+
+
+def tokens_col(text: Column | str) -> Column:
+    return F.expr(tokens_sql(sql_text(text)))
 
 
 def _distinct_tokens_first(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -60,9 +70,7 @@ def _distinct_tokens_first(df: DataFrame, text_col: str, id_col: str) -> DataFra
     split per hash column and md5-ing duplicate tokens — ~4× faster at
     sf0.1, bit-identical signatures (min over a set == min over the
     multiset)."""
-    return df.select(
-        F.col(id_col), F.array_distinct(tokens_col(F.col(text_col))).alias("_toks")
-    )
+    return df.selectExpr(id_col, f"array_distinct({tokens_sql(text_col)}) AS _toks")
 
 
 def minhash_table(
@@ -70,33 +78,18 @@ def minhash_table(
 ) -> DataFrame:
     """(id, h0..h{k-1}) minhash signature per document."""
     base = _distinct_tokens_first(df, text_col, id_col)
-    sig = minhash_signature_cols(F.col("_toks"), num_hashes)
-    return base.select(
-        F.col(id_col), *[s.alias(f"h{i}") for i, s in enumerate(sig)]
-    )
+    sig = minhash_signature_sql("_toks", num_hashes)
+    return base.selectExpr(id_col, *[f"{h} AS h{i}" for i, h in enumerate(sig)])
 
 
-def band_bucket_cols(sig: list[Column], rows_per_band: int) -> list[Column]:
-    """One md5 bucket column per band — THE bucket definition, shared by
-    every consumer (batch structs below, the wide pair plan, and the
-    streaming twin) so a doc lands in byte-identical buckets everywhere
-    by construction."""
-    cols = []
-    for b in range(len(sig) // rows_per_band):
-        parts = sig[b * rows_per_band : (b + 1) * rows_per_band]
-        cols.append(
-            F.md5(F.concat_ws("_", *[p.cast("string") for p in parts]))
-        )
-    return cols
-
-
-def band_bucket_structs(sig: list[Column], rows_per_band: int) -> list[Column]:
-    """(band, bucket) structs over a signature column list (see
-    band_bucket_cols for the shared bucket definition)."""
-    return [
-        F.struct(F.lit(b).alias("band"), c.alias("bucket"))
-        for b, c in enumerate(band_bucket_cols(sig, rows_per_band))
-    ]
+def band_bucket_structs_sql(sig: list[str], rows_per_band: int) -> str:
+    """SQL array of (band, bucket) structs over the signature's SQL
+    expressions; the bucket is blocking.band_hash_sql, the definition
+    the streaming twin shares."""
+    return "array(" + ", ".join(
+        f"named_struct('band', {b}, 'bucket', {h})"
+        for b, h in enumerate(band_hash_sql(sig, rows_per_band))
+    ) + ")"
 
 
 def minhash_band_buckets(
@@ -109,11 +102,10 @@ def minhash_band_buckets(
     """(id, band, bucket) — LSH banding over the signature; same bucket ⇒
     candidate duplicate pair."""
     base = _distinct_tokens_first(df, text_col, id_col)
-    sig = minhash_signature_cols(F.col("_toks"), num_hashes)
-    bands = band_bucket_structs(sig, rows_per_band)
-    return base.select(F.col(id_col), F.explode(F.array(*bands)).alias("bb")).select(
-        id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
+    sig = minhash_signature_sql("_toks", num_hashes)
+    return base.selectExpr(
+        id_col, f"explode({band_bucket_structs_sql(sig, rows_per_band)}) AS bb"
+    ).selectExpr(id_col, "bb.band AS band", "bb.bucket AS bucket")
 
 
 def minhash_dup_pairs(
@@ -166,12 +158,9 @@ def minhash_dup_pairs(
         n_salts = max(8, df.sparkSession.sparkContext.defaultParallelism)
     df = spread_small_input(df.select(id_col, text_col))
     base = _distinct_tokens_first(df, text_col, id_col)
-    sig = minhash_signature_cols(F.col("_toks"), num_hashes)
-    buckets = band_bucket_cols(sig, rows_per_band)
+    buckets = band_hash_sql(minhash_signature_sql("_toks", num_hashes), rows_per_band)
     n_bands = len(buckets)
-    wide = base.select(
-        F.col(id_col), *[c.alias(f"_bk{b}") for b, c in enumerate(buckets)]
-    )
+    wide = base.selectExpr(id_col, *[f"{h} AS _bk{b}" for b, h in enumerate(buckets)])
     # one narrow row per doc (id + num_bands md5 strings) feeding the
     # heavy census + both sides of every band join → materialize once
     wide = wide.localCheckpoint()
@@ -194,7 +183,7 @@ def minhash_dup_pairs(
             F.when(
                 F.col("_heavy"),
                 F.pmod(
-                    hash60(F.col(id_col).cast("string"), "mhsalt"),
+                    hash60(f"CAST({id_col} AS STRING)", "mhsalt"),
                     F.lit(n_salts),
                 ),
             )
@@ -355,7 +344,7 @@ def ngram_jaccard_pairs(
     t = df.select(
         F.col(block_col).alias("block"),
         F.col(id_col),
-        F.array_distinct(tokens_col(F.col(text_col))).alias("toks"),
+        F.array_distinct(tokens_col(text_col)).alias("toks"),
     ).withColumn("sz", F.size("toks"))
     a = t.select(
         "block", F.col(id_col).alias("id_a"),
@@ -543,7 +532,7 @@ def ngram_jaccard_pairs_prefix(
     t = df.select(
         F.col(block_col).alias("block"),
         F.col(id_col),
-        F.array_distinct(tokens_col(F.col(text_col))).alias("toks"),
+        F.array_distinct(tokens_col(text_col)).alias("toks"),
     ).withColumn("sz", F.size("toks"))
 
     df_tbl = (

@@ -156,6 +156,14 @@ def fit_gbdt(
     # Arrow path lands the same rows columnar; the fit is row-order-
     # invariant (docstring above), so the model artifact is identical.
     pdf = deterministic_fit_sample(pairs, cols, sample_n, sample_seed).toPandas()
+    # toPandas lands a NULL as NaN, which the fit would silently learn
+    # from (NaN gains and leaf values): refuse it instead
+    holes = {c: int(n) for c, n in pdf.isna().sum().items() if n}
+    if holes:
+        raise ValueError(
+            f"fit_gbdt: NULL/NaN values in the fit sample {holes}; "
+            "fill or drop them before the fit"
+        )
     X = pdf[list(feature_cols)].to_numpy(dtype=float)
     y = pdf[label_col].to_numpy(dtype=float)
     return fit_gbdt_numpy(

@@ -32,16 +32,12 @@ def candidate_pairs(blocks: DataFrame, payload: DataFrame | None = None) -> Data
     carrying wide rows through the quadratic self-join (keeps the shuffle
     rows narrow: two strings per side).
     """
-    a = blocks.select(F.col("block_key"), F.col("url").alias("url_a"))
-    b = blocks.select(F.col("block_key"), F.col("url").alias("url_b"))
-    pairs = (
-        a.join(b, "block_key")
-        .where(F.col("url_a") < F.col("url_b"))
-        .select("block_key", "url_a", "url_b")
-    )
+    a = blocks.selectExpr("block_key", "url AS url_a")
+    b = blocks.selectExpr("block_key", "url AS url_b")
+    pairs = a.join(b, "block_key").where("url_a < url_b")
     # One scored pair per (url_a,url_b): keep the lexically-min block_key so
     # the choice is deterministic (multi-band hits collapse to one row).
-    pairs = pairs.groupBy("url_a", "url_b").agg(F.min("block_key").alias("block_key"))
+    pairs = pairs.groupBy("url_a", "url_b").agg(F.expr("min(block_key) AS block_key"))
     if payload is not None:
         pairs = _attach_payload(pairs, payload)
     return pairs
@@ -59,7 +55,7 @@ def salted_candidate_pairs(
     a = blocks.select(
         "block_key",
         F.col("url").alias("url_a"),
-        F.pmod(hash60(F.col("url"), "pairsalt"), F.lit(n_salts)).alias("salt"),
+        F.pmod(hash60("url", "pairsalt"), F.lit(n_salts)).alias("salt"),
     )
     b = blocks.select(
         "block_key",
@@ -85,10 +81,6 @@ def _attach_payload(pairs: DataFrame, payload: DataFrame) -> DataFrame:
     urls would duplicate pairs — callers filtering the payload between
     blocking and scoring must re-block instead."""
     cols = [c for c in payload.columns if c != "url"]
-    pa = payload.select(
-        F.col("url").alias("url_a"), *[F.col(c).alias(f"{c}_a") for c in cols]
-    )
-    pb = payload.select(
-        F.col("url").alias("url_b"), *[F.col(c).alias(f"{c}_b") for c in cols]
-    )
+    pa = payload.selectExpr("url AS url_a", *[f"{c} AS {c}_a" for c in cols])
+    pb = payload.selectExpr("url AS url_b", *[f"{c} AS {c}_b" for c in cols])
     return pairs.join(pa, "url_a").join(pb, "url_b")

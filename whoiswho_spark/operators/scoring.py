@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from whoiswho_spark.constants import W_AUTHOR, W_ORG, W_TITLE, W_VENUE
+from whoiswho_spark.functions.sqltext import sql_lit
 from whoiswho_spark.functions.similarity import (
     dot_col,
     intersect_count_col,
@@ -43,11 +44,11 @@ MEMO_CAP = 2048
 
 
 def _score_expr() -> "F.Column":
-    return (
-        F.lit(W_AUTHOR) * F.col("f_emb_dot")
-        + F.lit(W_ORG) * F.col("f_text_tanimoto")
-        + F.lit(W_VENUE) * F.col("f_title_cos3")
-        + F.lit(W_TITLE) * F.least(F.col("f_title_common"), F.lit(3.0))
+    return F.expr(
+        f"{sql_lit(W_AUTHOR)} * f_emb_dot"
+        f" + {sql_lit(W_ORG)} * f_text_tanimoto"
+        f" + {sql_lit(W_VENUE)} * f_title_cos3"
+        f" + {sql_lit(W_TITLE)} * least(f_title_common, 3.0D)"
     )
 
 

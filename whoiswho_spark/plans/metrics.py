@@ -13,7 +13,7 @@ load_utils.py:25-173); ours is a thin deterministic table protocol:
   (run_id, stage, partition_id, rows_out, wall_ms, ts).
 
 ``stage()`` is the only entry point: skip-if-complete, else compute,
-write, count per partition, append metrics. Partition counts come from
+write, count per partition, record metrics. Partition counts come from
 the write job itself: each successful write task's
 ``outputMetrics.recordsWritten`` as the JVM status store recorded it,
 so ``partition_id`` is the partition index of the write task and
@@ -23,9 +23,21 @@ crash-window backfill on resume, which has no write to read from, and a
 write the status store did not record in full re-count the stored table
 by ``spark_partition_id`` instead.
 
-Metric rows are built as a JVM literal relation (``_append_rows``),
-never with ``spark.createDataFrame(list)``, which starts a Python worker
-(about 1 s per call) for a handful of rows.
+Appends: a direct ``stage()`` call appends its rows at once. A run
+(``run_pipeline``) passes a ``lineage`` buffer instead: its stages' rows
+stay in memory and ``flush_lineage`` appends them in ONE write, in a
+``finally``, so a failing stage still records the stages before it. The
+buffered counts double as planning facts for the rest of the run
+(``stage_rows``). Crash window: a kill after a stage's ``_SUCCESS`` but
+before the flush (or the direct append) leaves a complete checkpoint
+with no metrics rows; the resumed run backfills them from the stored
+table (``wall_ms = 0``), so no lineage is lost for good.
+
+Metric rows are built as one SQL-text literal relation
+(``_append_rows``: a single ``selectExpr`` call), never with
+``spark.createDataFrame(list)``, which starts a Python worker (about
+1 s per call), nor with per-value ``F.lit`` columns (three py4j round
+trips per value).
 
 At cluster scale the same protocol targets Iceberg tables
 (``writeTo(...).append()``); parquet-dir is the local stand-in with
@@ -34,12 +46,16 @@ identical semantics.
 
 from __future__ import annotations
 
+import functools
+import json
 import time
 import uuid
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from whoiswho_spark.functions.sqltext import sql_lit
 
 METRICS_SCHEMA = (
     "run_id string, stage string, partition_id int, rows_out bigint, "
@@ -73,19 +89,20 @@ def _append_rows(
     """Append ``rows`` to the parquet table at ``path``. ``schema`` is
     the table's DDL; its last column is the ``ts timestamp`` stamped
     here, so each row carries the values of the other columns in order.
-    The rows become a literal relation planned in the JVM — one write
-    job, no Python worker."""
+    The rows become one SQL-text literal relation planned in the JVM —
+    one ``selectExpr`` call, one write job, no Python worker."""
+    if not rows:
+        return
     cols = [c.split() for c in schema.split(",")][:-1]
-    lit_rows = F.array(
-        *[
-            F.struct(*[F.lit(v).cast(t).alias(n) for (n, t), v in zip(cols, row)])
-            for row in rows
-        ]
+    structs = ", ".join(
+        "named_struct("
+        + ", ".join(f"'{n}', CAST({sql_lit(v)} AS {t})" for (n, t), v in zip(cols, row))
+        + ")"
+        for row in rows
     )
     (
         spark.range(0, 1, 1, 1)
-        .select(F.inline(lit_rows))
-        .withColumn("ts", F.current_timestamp())
+        .selectExpr(f"inline(array({structs}))", "current_timestamp() AS ts")
         .write.mode("append")
         .parquet(path)
     )
@@ -117,6 +134,16 @@ def append_metrics(
     counts.write.mode("append").parquet(f"{workdir}/metrics")
 
 
+@functools.lru_cache(maxsize=1)
+def _json_mapper(jvm):
+    """A Jackson mapper with the Scala module — the serializer of
+    Spark's REST API — so a status-store record crosses py4j as one
+    JSON string instead of one round trip per field."""
+    mapper = jvm.com.fasterxml.jackson.databind.ObjectMapper()
+    mapper.findAndRegisterModules()
+    return mapper
+
+
 def _written_rows(spark: SparkSession, group: str) -> dict[int, int] | None:
     """partition → records written by the write job in job group
     ``group``, read from the JVM status store; None when the store does
@@ -131,36 +158,37 @@ def _written_rows(spark: SparkSession, group: str) -> dict[int, int] | None:
     double-counted."""
     sc = spark.sparkContext
     jsc = sc._jsc.sc()
-    # task-end events reach the status store through the async listener
-    # bus; drain it so the write's tasks are all recorded
-    try:
-        jsc.listenerBus().waitUntilEmpty()
-    except Py4JJavaError:  # the drain timed out
-        return None
-    tracker = sc.statusTracker()
-    job_ids = tracker.getJobIdsForGroup(group)
-    if not job_ids:
-        return None
-    job = tracker.getJobInfo(max(job_ids))
-    if job is None or job.status != "SUCCEEDED":
-        return None
-    result_stage = max(job.stageIds)
-    info = tracker.getStageInfo(result_stage)
-    if info is None:
-        return None
+    mapper = _json_mapper(sc._jvm)
     store = jsc.statusStore()
-    as_java = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
-    rows: dict[int, int] = {}
-    for attempt in range(info.currentAttemptId, -1, -1):
-        for td in as_java(store.taskList(result_stage, attempt, 2**31 - 1)):
-            part = td.partitionId()
-            if td.status() != "SUCCESS" or part in rows:
-                continue
-            m = td.taskMetrics()
-            rows[part] = m.get().outputMetrics().recordsWritten() if m.isDefined() else 0
-        if attempt == info.currentAttemptId and len(rows) != info.numTasks:
-            return None  # the succeeded attempt lacks some of its tasks
-    return rows
+
+    def read(record) -> object:
+        return json.loads(mapper.writeValueAsString(record))
+
+    try:
+        # task-end events reach the status store through the async
+        # listener bus; drain it so the write's tasks are all recorded
+        jsc.listenerBus().waitUntilEmpty()
+        job_ids = read(sc._jsc.statusTracker().getJobIdsForGroup(group))
+        if not job_ids:
+            return None
+        job = read(store.job(max(job_ids)))
+        if job.get("status") != "SUCCEEDED":
+            return None
+        result_stage = max(job["stageIds"])
+        last = read(store.lastStageAttempt(result_stage))
+        rows: dict[int, int] = {}
+        for attempt in range(last["attemptId"], -1, -1):
+            for td in read(store.taskList(result_stage, attempt, 2**31 - 1)):
+                part = td["partitionId"]
+                if td["status"] != "SUCCESS" or part in rows:
+                    continue
+                m = td.get("taskMetrics")
+                rows[part] = m["outputMetrics"]["recordsWritten"] if m else 0
+            if attempt == last["attemptId"] and len(rows) != last["numTasks"]:
+                return None  # the succeeded attempt lacks some of its tasks
+        return rows
+    except Py4JJavaError:  # the drain timed out, or a record was evicted
+        return None
 
 
 def _write_counted(
@@ -187,19 +215,25 @@ def stage(
     name: str,
     compute,
     resume: bool = True,
+    lineage: list[tuple] | None = None,
 ) -> DataFrame:
     """Checkpointed stage: returns the stage's output DataFrame, reading
     the existing checkpoint when complete (resume), else computing via
-    ``compute() -> DataFrame``, writing, and recording lineage."""
+    ``compute() -> DataFrame``, writing, and recording lineage.
+
+    ``lineage`` is a run's buffer of metrics rows: the stage's rows are
+    added to it (``flush_lineage`` writes them, ``stage_rows`` reads the
+    count back) instead of being appended to the table right away."""
     path = f"{workdir}/{name}"
     if resume and _success_exists(spark, path):
         persisted = spark.read.parquet(path)
         # Crash window: the checkpoint committer wrote _SUCCESS but the
-        # process died before the lineage append. A resumed run would
-        # otherwise return here and the (stage) metrics rows would be
-        # missing FOREVER — backfill them from the checkpoint (wall_ms=0
-        # marks a backfilled row; partition counts re-derived from the
-        # stored table sum to the same rows the original append records).
+        # process died before the lineage append (or before a run's
+        # buffered flush). A resumed run would otherwise return here and
+        # the (stage) metrics rows would be missing FOREVER — backfill
+        # them from the checkpoint (wall_ms=0 marks a backfilled row;
+        # partition counts re-derived from the stored table sum to the
+        # same rows the original append records).
         try:
             have = (
                 read_metrics(spark, workdir)
@@ -229,11 +263,28 @@ def stage(
         return persisted
     # an empty output still records one row, so every stage that ran
     # shows up in the lineage
-    rows = [
-        (run_id, name, p, n, wall_ms) for p, n in sorted((written or {0: 0}).items())
-    ]
-    _append_rows(spark, f"{workdir}/metrics", METRICS_SCHEMA, rows)
+    rows = [(run_id, name, p, n, wall_ms) for p, n in sorted((written or {0: 0}).items())]
+    if lineage is None:
+        _append_rows(spark, f"{workdir}/metrics", METRICS_SCHEMA, rows)
+    else:
+        lineage.extend(rows)
     return persisted
+
+
+def flush_lineage(spark: SparkSession, workdir: str, lineage: list[tuple]) -> None:
+    """Append a run's buffered stage rows (``stage(lineage=...)``) to
+    the metrics table in one write, and empty the buffer."""
+    _append_rows(spark, f"{workdir}/metrics", METRICS_SCHEMA, lineage)
+    lineage.clear()
+
+
+def stage_rows(lineage: list[tuple], name: str) -> int | None:
+    """Rows stage ``name`` wrote in this run, from its buffered lineage
+    (the write tasks' own counts); None when the stage did not write
+    here (resumed from its checkpoint) or was re-counted from the
+    stored table."""
+    counts = [row[3] for row in lineage if row[1] == name]
+    return sum(counts) if counts else None
 
 
 def stage_bucketed(

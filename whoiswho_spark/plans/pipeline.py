@@ -25,21 +25,25 @@ from pyspark.sql import functions as F
 
 from whoiswho_spark.constants import POST_MATCH_THRESHOLD
 from whoiswho_spark.functions.normalize import (
-    corpus_tokens_col,
+    corpus_tokens_sql,
     extract_text_udf,
-    norm_text_col,
-    title_tokens_col,
+    norm_text_sql,
+    title_tokens_sql,
 )
+from whoiswho_spark.functions.sqltext import sql_str
 from whoiswho_spark.operators.blocking import (
     cap_block_size,
     lsh_block_keys,
-    normalized_host_col,
+    normalized_host_sql,
 )
 from whoiswho_spark.operators.clustering import connected_components, threshold_edges
 from whoiswho_spark.operators.evaluation import labeled_block_view, macro_pairwise_f1
 from whoiswho_spark.operators.pairs import candidate_pairs, salted_candidate_pairs
 from whoiswho_spark.operators.scoring import score_pairs
 from whoiswho_spark.plans import metrics as M
+
+
+_TITLE_RE = r"(?is)<title>(.*?)</title>"
 
 
 @dataclass
@@ -95,18 +99,20 @@ def extract_stage(pages: DataFrame) -> DataFrame:
     pandas UDF — at scale you'd trust the stored column and sample-audit,
     here we recompute to prove byte-identity end-to-end.
     """
-    raw = F.col("html").cast("string")
-    title = F.regexp_extract(raw, r"(?is)<title>(.*?)</title>", 1)
-    norm_title = norm_text_col(title)
-    extracted = extract_text_udf(F.col("html"))
+    title = f"regexp_extract(CAST(html AS STRING), {sql_str(_TITLE_RE)}, 1)"
+    norm_title = norm_text_sql("title_raw")
     return pages.select(
         "url",
-        title.alias("title_raw"),
-        norm_title.alias("title"),
-        extracted.alias("text"),
-        title_tokens_col(norm_title).alias("title_tokens"),
-        corpus_tokens_col(extracted).alias("text_tokens"),
-        normalized_host_col(F.col("url")).alias("host"),
+        F.expr(f"{title} AS title_raw"),
+        extract_text_udf(F.col("html")).alias("text"),
+    ).selectExpr(
+        "url",
+        "title_raw",
+        f"{norm_title} AS title",
+        "text",
+        f"{title_tokens_sql(norm_title)} AS title_tokens",
+        f"{corpus_tokens_sql('text')} AS text_tokens",
+        f"{normalized_host_sql('url')} AS host",
     )
 
 
@@ -127,9 +133,26 @@ def run_pipeline(
     checkpointed stage.
     """
     run_id = run_id or M.new_run_id()
+    lineage: list[tuple] = []
+    try:
+        return _run_stages(spark, pages, embeddings, workdir, cfg, run_id, lineage)
+    finally:
+        # one metrics append per run; a kill before it is the crash
+        # window that stage() backfills on resume
+        M.flush_lineage(spark, workdir, lineage)
 
+
+def _run_stages(
+    spark: SparkSession,
+    pages: DataFrame,
+    embeddings: DataFrame | None,
+    workdir: str,
+    cfg: ERConfig,
+    run_id: str,
+    lineage: list[tuple],
+) -> DataFrame:
     def _stage(name, compute):
-        return M.stage(spark, workdir, run_id, name, compute, cfg.resume)
+        return M.stage(spark, workdir, run_id, name, compute, cfg.resume, lineage)
 
     payload = _stage("extract", lambda: extract_stage(pages))
 
@@ -149,6 +172,8 @@ def run_pipeline(
 
         embeddings = _stage("embeddings", _w2v_embeddings)
 
+    n_pages = M.stage_rows(lineage, "extract")
+
     def _blocks():
         b = lsh_block_keys(
             payload.select("url", "title", "host"),
@@ -156,6 +181,11 @@ def run_pipeline(
             num_hashes=cfg.num_hashes,
             bands=cfg.bands,
         )
+        # a block holds at most one row per page (the band index is part
+        # of its key), so with no more pages than the cap no block can
+        # exceed it: skip the cap's window and its shuffle
+        if n_pages is not None and n_pages <= cfg.block_cap:
+            return b
         return cap_block_size(b, cfg.block_cap)
 
     blocks = _stage("blocks", _blocks)
@@ -163,10 +193,7 @@ def run_pipeline(
     def _pairs():
         pay = payload.select("url", "title", "title_tokens", "text_tokens").join(
             embeddings.select("url", "embedding"), "url", "left"
-        ).withColumn(
-            "embedding",
-            F.coalesce("embedding", F.array([F.lit(0.0)])),
-        )
+        ).withColumn("embedding", F.expr("coalesce(embedding, array(0.0D))"))
         if cfg.n_salts > 1:
             p = salted_candidate_pairs(blocks, cfg.n_salts, payload=pay)
         else:
@@ -353,6 +380,7 @@ def run_pipeline(
             # changed edge set never reuses stale iterations
             checkpoint_dir=f"{workdir}/cc_checkpoints",
             resume=cfg.resume,
+            input_count=M.stage_rows(lineage, "edges"),
         ),
     )
 

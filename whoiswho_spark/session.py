@@ -31,6 +31,29 @@ def spread_small_input(df, min_factor: float = 0.5):
     return df
 
 
+def master_io_defaults(master: str) -> dict[str, str]:
+    """Shuffle-compression and scan-split defaults, which depend on
+    where the bytes go; the SPARK_GRAFT_SHUFFLE_COMPRESS and
+    SPARK_GRAFT_MAX_PARTITION_BYTES env knobs override both.
+
+    A local master (``local``, ``local[N]``, ``local-cluster[...]``)
+    shuffles to page-cache-backed local disk, where lz4's per-row framing
+    CPU dominates narrow-row exchanges (round 6, sf1/local[32]: ngram's
+    500M-row candidate distinct 46.2 s with lz4, 17.1 s uncompressed,
+    94.0 s zstd), so shuffle is uncompressed; and it reads the 5–130 MB
+    test files, which 128 MB splits would pack into 1–2 serial scan
+    tasks, so splits target row-group size (16m). Any other master is a
+    cluster: shuffle crosses NICs, where compression pays, and files are
+    large, so Spark's own defaults apply (compressed, 128m; TB-scale
+    inputs may want 512m–1g).
+    """
+    local = master.startswith("local")
+    return {
+        "spark.shuffle.compress": "false" if local else "true",
+        "spark.sql.files.maxPartitionBytes": "16m" if local else "128m",
+    }
+
+
 def get_spark(
     app_name: str = "whoiswho_spark",
     master: str | None = None,
@@ -55,6 +78,7 @@ def get_spark(
         inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else ""
         shuffle_partitions = cpus if inner in ("", "*") else int(inner)
 
+    io = master_io_defaults(master)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -85,35 +109,18 @@ def get_spark(
             "spark.sql.adaptive.autoBroadcastJoinThreshold",
             os.environ.get("SPARK_GRAFT_RUNTIME_BROADCAST", str(64 * 1024 * 1024)),
         )
-        # Shuffle compression (round 6, guide §2.3 "measure both"): the
-        # pair-heavy exchanges shuffle hundreds of millions of NARROW
-        # rows (two bigints), where lz4's per-row framing CPU dominates
-        # the stage — measured at sf1/local[32]: ngram's 500M-row
-        # candidate distinct 46.2 s with lz4, 17.1 s uncompressed, 94.0 s
-        # zstd. Local shuffle goes to page-cache-backed disk with far
-        # more bandwidth than lz4 throughput, so compression is pure
-        # overhead here. Production note: on a NETWORK-bound cluster
-        # compression usually pays — set SPARK_GRAFT_SHUFFLE_COMPRESS=true
-        # (and pick the codec per guide §2.3) when shuffle crosses NICs;
-        # the local default only asserts that disk-local shuffle bytes
-        # are cheaper than codec CPU, which holds on any node with fast
-        # local disks.
         .config(
             "spark.shuffle.compress",
-            os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", "false"),
+            os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", io["spark.shuffle.compress"]),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
-        # Scan split size (round 6, guide §6): the local testdata ships
-        # 5–130 MB files (≥1 row group each); the 128 MB default packs a
-        # whole table into 1–2 splits and serializes the scan stage. The
-        # local default targets splits ≈ row-group size so multi-row-
-        # group tables scan in parallel; a real deployment reading TB+
-        # files should override to 512m–1g (fewer, larger map tasks —
-        # guide §2.2) via the env knob.
         .config(
             "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
+            os.environ.get(
+                "SPARK_GRAFT_MAX_PARTITION_BYTES",
+                io["spark.sql.files.maxPartitionBytes"],
+            ),
         )
     )
     if extra_conf:

@@ -10,7 +10,7 @@ the per-LSH-bucket membership as OPERATOR STATE
 
 - the signature/banding chain is the SAME Catalyst expression chain the
   batch operator uses (dedup._distinct_tokens_first +
-  blocking.minhash_signature_cols + the md5 band buckets), so a document
+  blocking.minhash_signature_sql + the md5 band buckets), so a document
   lands in byte-identical buckets in both engines and the streamed
   candidate-pair set equals the batch set on the same corpus;
 - state per key is the bucket's member list (ids + signatures) —
@@ -48,8 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
-from whoiswho_spark.operators.blocking import minhash_signature_cols
-from whoiswho_spark.operators.dedup import band_bucket_structs, tokens_col
+from whoiswho_spark.operators.blocking import minhash_signature_sql
+from whoiswho_spark.operators.dedup import band_bucket_structs_sql, tokens_sql
 
 OUTPUT_SCHEMA = (
     "id_a string, id_b string, band int, bucket string, est_jaccard double"
@@ -89,33 +89,24 @@ def minhash_stream_buckets(
     # null ingest ts coalesces to 0 = infinitely old: immediately outside
     # any retention window, never poisons int() in the matcher
     ts = (
-        F.coalesce(F.col(ts_col).cast("bigint"), F.lit(0).cast("bigint"))
+        f"coalesce(CAST({ts_col} AS BIGINT), CAST(0 AS BIGINT))"
         if ts_col
-        else F.lit(0).cast("bigint")
+        else "CAST(0 AS BIGINT)"
     )
-    # same tokenize chain as the batch operator (dedup.tokens_col +
+    # same tokenize chain as the batch operator (dedup.tokens_sql +
     # array_distinct — the _distinct_tokens_first projection, widened by
     # the ts column)
-    base = docs.select(
-        F.col(id_col),
-        ts.alias("ts"),
-        F.array_distinct(tokens_col(F.col(text_col))).alias("_toks"),
+    base = docs.selectExpr(
+        id_col, f"{ts} AS ts", f"array_distinct({tokens_sql(text_col)}) AS _toks"
     )
-    sig = minhash_signature_cols(F.col("_toks"), num_hashes)
-    sig_str = F.concat_ws("_", *[s.cast("string") for s in sig])
-    bands = band_bucket_structs(sig, rows_per_band)
-    return base.select(
-        F.col(id_col).alias("doc_id"),
-        sig_str.alias("sig"),
+    sig = minhash_signature_sql("_toks", num_hashes)
+    sig_str = "concat_ws('_', " + ", ".join(f"CAST({h} AS STRING)" for h in sig) + ")"
+    return base.selectExpr(
+        f"{id_col} AS doc_id",
+        f"{sig_str} AS sig",
         "ts",
-        F.explode(F.array(*bands)).alias("bb"),
-    ).select(
-        "doc_id",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
-        "sig",
-        "ts",
-    )
+        f"explode({band_bucket_structs_sql(sig, rows_per_band)}) AS bb",
+    ).selectExpr("doc_id", "bb.band AS band", "bb.bucket AS bucket", "sig", "ts")
 
 
 def _est_jaccard(sig_a: str, sig_b: str) -> float:
