@@ -270,6 +270,35 @@ def test_append_rows_round_trips_awkward_literals(spark, tmp_path):
     assert got == sorted(rows)
 
 
+def _compiled_classes(spark) -> int:
+    """Whole-stage classes compiled so far in this JVM (codegen cache
+    misses)."""
+    cm = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_append_rows_reuses_generated_code(spark, tmp_path):
+    """A metrics append with other rows and a later stamp runs the
+    generated class of the first append: the stamp travels inside the
+    literal rows, so no per-append constant is compiled into the code."""
+    from whoiswho_spark.plans import metrics as M
+
+    path = str(tmp_path / "metrics")
+    M._append_rows(spark, path, M.METRICS_SCHEMA, [("r1", "extract", 0, 5, 10)])
+    before = _compiled_classes(spark)
+    M._append_rows(
+        spark, path, M.METRICS_SCHEMA,
+        [("r2", "blocks", 0, 7, 11), ("r2", "blocks", 1, 3, 12)],
+    )
+    assert _compiled_classes(spark) == before
+    got = spark.read.parquet(path).orderBy("ts", "run_id", "partition_id").collect()
+    assert [(r.run_id, r.partition_id, r.rows_out) for r in got] == [
+        ("r1", 0, 5), ("r2", 0, 7), ("r2", 1, 3),
+    ]
+    # one stamp per append, in append order
+    assert got[1].ts == got[2].ts and got[0].ts < got[1].ts
+
+
 def test_stage_restores_caller_job_group(spark, tmp_path):
     """stage() runs its write under its own job group; the caller's job
     group and description are back in place afterwards."""
@@ -408,6 +437,42 @@ def test_snd_op_job_budget(spark, corpus, workdir):
     run_pipeline(spark, pages, embs, f"{workdir}/budget", cfg)
     jobs = _max_job_id(spark) - j0
     assert jobs <= SND_JOB_BUDGET, f"{jobs} jobs > budget {SND_JOB_BUDGET}"
+
+
+def _pairs_stage_initial_plan(spark, since: int) -> str:
+    """The pre-AQE physical plan of the last pairs-stage write started
+    after SQL execution ``since``."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        execs.apply(k).physicalPlanDescription()
+        for k in range(since, execs.size())
+        if ":pairs:" in execs.apply(k).description()
+    ]
+    assert plans, "no pairs-stage write found"
+    return plans[-1].split("== Initial Plan ==")[1].split("\n\n")[0]
+
+
+def test_small_payload_broadcast_fixes_pairs_plan(spark, corpus, workdir, monkeypatch):
+    """With the extract stage's page count within the cap, both payload
+    joins are broadcast joins before AQE runs, so no shuffle-completion
+    race picks the plan; past the cap the choice is left to AQE."""
+    from whoiswho_spark.plans import pipeline
+
+    pages, embs, _ = _split(corpus)
+    store = spark._jsparkSession.sharedState().statusStore()
+    merge_joins = {}
+    for cap in (10_000, 0):
+        monkeypatch.setattr(pipeline, "BROADCAST_PAYLOAD_PAGES", cap)
+        since = store.executionsCount()
+        cfg = ERConfig(resume=False)
+        run_pipeline(spark, pages, embs, f"{workdir}/bcast_{cap}", cfg)
+        plan = _pairs_stage_initial_plan(spark, since)
+        merge_joins[cap] = plan.count("SortMergeJoin Inner")
+    # past the cap both payload joins are planned as sort-merge joins
+    # (on this small corpus the pair self-join is a static broadcast)
+    assert merge_joins == {10_000: 0, 0: 2}
 
 
 def test_eval_restricted_to_shared_block_pairs(spark, corpus, workdir):

@@ -30,3 +30,10 @@ def test_local_session_uses_local_io_defaults(spark):
     assert conf.get("spark.sql.files.maxPartitionBytes") == os.environ.get(
         "SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"
     )
+
+
+def test_codegen_cache_holds_a_run(spark):
+    """The generated-code cache is sized past one pipeline run plus its
+    evaluation (about 100 classes)."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.sql.codegen.cache.maxEntries") == "512"

@@ -90,19 +90,27 @@ def _append_rows(
     the table's DDL; its last column is the ``ts timestamp`` stamped
     here, so each row carries the values of the other columns in order.
     The rows become one SQL-text literal relation planned in the JVM —
-    one ``selectExpr`` call, one write job, no Python worker."""
+    one ``selectExpr`` call, one write job, no Python worker.
+
+    The stamp is part of the literal array, not a ``current_timestamp()``
+    column: the optimizer folds the array into one literal that generated
+    code reads by reference, whereas a folded timestamp column would be
+    inlined into the code. So every append runs the same generated class,
+    served from the codegen cache, instead of compiling a new one."""
     if not rows:
         return
-    cols = [c.split() for c in schema.split(",")][:-1]
+    cols = [c.split() for c in schema.split(",")]
+    ts = cols.pop()[0]
+    stamp = f"'{ts}', timestamp_micros({time.time_ns() // 1000})"
     structs = ", ".join(
         "named_struct("
         + ", ".join(f"'{n}', CAST({sql_lit(v)} AS {t})" for (n, t), v in zip(cols, row))
-        + ")"
+        + f", {stamp})"
         for row in rows
     )
     (
         spark.range(0, 1, 1, 1)
-        .selectExpr(f"inline(array({structs}))", "current_timestamp() AS ts")
+        .selectExpr(f"inline(array({structs}))")
         .write.mode("append")
         .parquet(path)
     )

@@ -45,6 +45,13 @@ from whoiswho_spark.plans import metrics as M
 
 _TITLE_RE = r"(?is)<title>(.*?)</title>"
 
+# With at most this many pages (the extract stage's write count) the
+# pairs stage broadcasts the page payload to both of its url joins;
+# larger or resumed runs leave the join choice to AQE (see _run_stages).
+# 450 pages broadcast as about 4 MB, so 2000 pages stay well under AQE's
+# 64 MB runtime threshold.
+BROADCAST_PAYLOAD_PAGES = 2000
+
 
 @dataclass
 class ERConfig:
@@ -194,6 +201,16 @@ def _run_stages(
         pay = payload.select("url", "title", "title_tokens", "text_tokens").join(
             embeddings.select("url", "embedding"), "url", "left"
         ).withColumn("embedding", F.expr("coalesce(embedding, array(0.0D))"))
+        # Both payload joins start as sort-merge joins (static size
+        # estimates are past the 1 MB static threshold), and AQE turns
+        # each into a broadcast join on whichever side's shuffle finishes
+        # first. Run to run that race broadcasts either the payload or
+        # the pairs, so the plan, its job count and its generated code
+        # change between identical runs. A small payload is broadcast
+        # outright: one fixed plan, in which the pairs stream in their
+        # aggregate's (url_a, url_b) order, so scoring needs no sort.
+        if n_pages is not None and n_pages <= BROADCAST_PAYLOAD_PAGES:
+            pay = F.broadcast(pay)
         if cfg.n_salts > 1:
             p = salted_candidate_pairs(blocks, cfg.n_salts, payload=pay)
         else:

@@ -8,6 +8,8 @@ driver contract all run with the same physics:
 - Arrow transfer on — every Python-side kernel is a vectorized pandas UDF.
 - shuffle partitions sized to cores (local mode); on a real cluster this
   is set per-job via spark-submit conf.
+- a codegen cache that holds a whole run's generated classes, so a
+  repeated job never recompiles them.
 """
 
 from __future__ import annotations
@@ -113,6 +115,15 @@ def get_spark(
             "spark.shuffle.compress",
             os.environ.get("SPARK_GRAFT_SHUFFLE_COMPRESS", io["spark.shuffle.compress"]),
         )
+        # Generated-code cache (static, JVM-wide): one run_pipeline op
+        # plus its evaluation compiles about 100 distinct whole-stage
+        # classes, which is all of Spark's default 100 entries. At the
+        # default, the evaluation evicts the pipeline's classes and the
+        # next op recompiles about 40 of them (Janino, 20-50 ms each).
+        # That makes the first repeated op about a second slower, and by
+        # a varying amount. 512 entries keep a run's working set with
+        # room to spare.
+        .config("spark.sql.codegen.cache.maxEntries", "512")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config(
